@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Harness.jsonStr
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   * a query landed inside the same window. Interleaving decorrelates: a
   * window now inflates ONE pass (whose per-query samples the median
   * discards) instead of permanently branding whichever queries it
-  * happened to sweep. The warmup pass exists because the generic warmup
-  * block below cannot absorb PER-QUERY whole-stage-codegen compilation
+  * happened to sweep. The warmup pass exists because the generic
+  * [[Harness.warmup]] cannot absorb PER-QUERY whole-stage-codegen compilation
   * and JIT: the first interleaved run of this harness measured pass
   * totals 164s / 117s / 91s on a quiet host — a monotone JIT-warming
   * ramp, which a 3-pass median reads as pass 2's half-warm time. With
@@ -65,30 +65,9 @@ object Bench {
   private def fmt3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned, not inherited — same rationale as Verify: one documented
-      // overflow semantics (ANSI throws) regardless of deployment default
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // audit trail for the size-guarded broadcast hints: one stderr line per
     // distinct guard decision (site, estimate, fired-or-not) — what a
     // cluster profile reads before retuning the 64 MB threshold
@@ -101,15 +80,7 @@ object Bench {
     // read 20-40x faster for measuring a different thing. See
     // SimilarityQueries.memoizeModel.
     graft.queries.SimilarityQueries.memoizeModel = false
-    // absorb JVM/codegen/datasource warmup so per-query timings measure the
-    // queries, not first-touch initialization (scan + agg + sort + join)
-    locally {
-      import org.apache.spark.sql.functions._
-      val r = spark.range(2000000).select(col("id"), (col("id") % 1000).as("k"))
-      r.groupBy("k").count().orderBy("k").count()
-      r.join(spark.range(1000).withColumnRenamed("id", "k"), "k").count()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    }
+    Harness.warmup(spark, sfDir)
     // SPARK_GRAFT_ONLY=<regex>: time a subset while iterating (the full
     // BENCH_DETAIL.json artifact is only written for unfiltered runs, so a
     // partial run can never clobber the recorded full-catalog numbers)
@@ -148,14 +119,7 @@ object Bench {
               failMsgs += name -> (e.getClass.getSimpleName + ": " +
                 Option(e.getMessage).getOrElse("").take(200))
         }
-        // builders persist() intermediates (LSH signatures, IVF
-        // assignments); drop them between queries so caches don't
-        // accumulate and LRU-evict a cache a later query depends on
-        spark.sharedState.cacheManager.clearCache()
-        // RDD-level blocks (ConnectedComponents' labels localCheckpoint)
-        // sit outside the SQL cache manager — drop them too, or harness
-        // runs accumulate one orphaned cached RDD per dedup query
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        Harness.resetCaches(spark)
       }
       (passStart, System.currentTimeMillis() / 1000.0)
     }

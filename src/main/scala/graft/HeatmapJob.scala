@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.HeatmapPipeline
 
 /** CLI equivalent of the reference's batchMain (heatmap.py:152–158): read a
@@ -40,15 +39,7 @@ object HeatmapJob {
     val format = flag("--format", "parquet")
     val sink = flag("--sink", "parquet")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // ansi pinned as in Verify/Bench: one documented overflow semantics
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val locations = graft.sources.LocationsSource.read(spark, in, format)
     val blobs = HeatmapPipeline.run(locations,

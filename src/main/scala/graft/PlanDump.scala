@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes one `<outDir>/<query>.txt` formatted physical plan per catalog
-  * query matching the regex — the per-query twin of [[ExplainDump]] (which
-  * concatenates a curated headline list into EXPLAIN.md). Used by the
-  * optimization rounds to snapshot `plans/rNN/<query>_before.txt` /
-  * `_after.txt` evidence files.
+  * query matching the regex. Used by the optimization rounds to snapshot
+  * `plans/rNN/<query>_before.txt` / `_after.txt` evidence files, and the
+  * way to regenerate the plans EXPLAIN.md snapshots.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <nameRegex> [suffix]
   */
@@ -17,15 +15,10 @@ object PlanDump {
     val outDir = args(1)
     val rx = args(2)
     val suffix = args.drop(3).headOption.getOrElse("")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      // static plans are the review target; AQE re-plans at runtime
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pinned to 4 cores so the dumped plans don't vary with the host
+    val spark = Harness.session(4)
+    // static plans are the review target; AQE re-plans at runtime
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.specs.filter(_.name.matches(rx)).foreach { spec =>
@@ -38,8 +31,7 @@ object PlanDump {
         case e: Throwable =>
           System.err.println(s"[plandump] ${spec.name} failed: $e")
       }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.resetCaches(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query cost breakdown for optimization work: for every catalog query
   * matching the regex, runs `build()` + `count()` like Bench does and prints
@@ -23,15 +22,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val rx = args(1)
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.queries.SimilarityQueries.memoizeModel = false
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -46,14 +37,7 @@ object ProfileQuery {
       }
     })
 
-    // same generic warmup as Bench
-    locally {
-      import org.apache.spark.sql.functions._
-      val r = spark.range(2000000).select(col("id"), (col("id") % 1000).as("k"))
-      r.groupBy("k").count().orderBy("k").count()
-      r.join(spark.range(1000).withColumnRenamed("id", "k"), "k").count()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    }
+    Harness.warmup(spark, sfDir)
 
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => name.matches(rx) }
@@ -78,8 +62,7 @@ object ProfileQuery {
           case e: Throwable =>
             println(s"[profile] $name rep=$rep FAILED: $e")
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        Harness.resetCaches(spark)
       }
     }
     spark.stop()

@@ -40,74 +40,23 @@ object MinHashLSH {
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
       |  ELSE [] END""".stripMargin.replace("\n", " ")
 
-  /** Per-shingle 48-bit hashes, one row per (doc, distinct shingle) — the
-    * shared map-side front end of both signature shapes. */
-  private def shingleHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .select(col("doc_id"), explode(shingles(col("ws"))).as("sh"))
-      .select(col("doc_id"), (PortableHash.h48(col("sh")) % P).as("h"))
-
   /** MinHash signatures via explode + K plain min() aggregates — the
     * PRODUCTION shape: instead of higher-order array lambdas (transform()/
     * aggregate() evaluate interpreted per element), the hash + K affine mins
     * fuse into the scan stage under whole-stage codegen, and partial
     * aggregation shrinks the shuffle to ~1 row/doc. Columns: doc_id,
-    * mh0..mh{K-1}, sig (array). See [[signaturesViaAggregator]] for the
-    * measured alternative. */
+    * mh0..mh{K-1}, sig (array). */
   def signatures(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val sigAggs = (0 until K).map(j =>
       min((lit(A(j)) * col("h") + lit(B(j))) % P).as(s"mh$j"))
-    shingleHashes(docs, idCol, textCol).groupBy("doc_id")
+    docs
+      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
+      .select(col("doc_id"), explode(shingles(col("ws"))).as("sh"))
+      .select(col("doc_id"), (PortableHash.h48(col("sh")) % P).as("h"))
+      .groupBy("doc_id")
       .agg(sigAggs.head, sigAggs.tail: _*)
       .withColumn("sig", array((0 until K).map(j => col(s"mh$j")): _*))
-  }
-
-  /** Typed-`Aggregator` signature computation — SURVEY §7.3's one genuine
-    * custom-agg candidate, implemented so the choice is MEASURED, not
-    * asserted. One pass, all K affine mins updated in a mutable long-array
-    * buffer; returns the same (doc_id, mh*, sig) schema as [[signatures]]
-    * and is equality-pinned against it in OperatorSpec.
-    *
-    * MEASURED (graft.MinHashBench, 100k docs = 20× sf0.1, medians of 3):
-    * 0.67s vs 0.67s — exact parity with the explode+min shape. The
-    * explode+min form stays the production path on structural grounds: it
-    * runs fully inside whole-stage codegen with plain partial aggregation,
-    * while the udaf plans as ObjectHashAggregate, whose object buffers can
-    * fall back to sort-based aggregation under memory pressure at scales
-    * the measurement can't exercise. */
-  final class SigAggregator extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.fill(K)(Long.MaxValue)
-    override def reduce(b: Array[Long], h: Long): Array[Long] = {
-      var j = 0
-      while (j < K) {
-        val v = (A(j) * h + B(j)) % P
-        if (v < b(j)) b(j) = v
-        j += 1
-      }
-      b
-    }
-    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var j = 0
-      while (j < K) { if (y(j) < x(j)) x(j) = y(j); j += 1 }
-      x
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** [[signatures]] computed through [[SigAggregator]] (same output schema). */
-  def signaturesViaAggregator(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val sigUdaf = udaf(new SigAggregator)
-    shingleHashes(docs, idCol, textCol).groupBy("doc_id")
-      .agg(sigUdaf(col("h")).as("sig"))
-      .select(col("doc_id") +:
-        (0 until K).map(j => col("sig")(j).as(s"mh$j")) :+ col("sig"): _*)
   }
 
   /** (signatures, banded candidate pairs) for a document table with `idCol`

@@ -587,12 +587,12 @@ object SimilarityQueries {
   }
 
   /** ANN recall, INSIDE the oracle gate — the engine's retrieval-quality
-    * claim as a hash-compared catalog entry, not just an ANNBench number
-    * (ANNBench keeps the perf/recall-curve half). The whole IVF
-    * construction here is deterministic (fixed coarse centroids, integer
-    * tie-breaks), so per-query recall@[[RecallK]] is itself deterministic
-    * and BOTH sides of the comparison replay in DuckDB — a full gate,
-    * stronger than the `agg_approx_hll` exact-twin pattern this follows.
+    * claim as a hash-compared catalog entry, not just a benchmark number.
+    * The whole IVF construction here is deterministic (fixed coarse
+    * centroids, integer tie-breaks), so per-query recall@[[RecallK]] is
+    * itself deterministic and BOTH sides of the comparison replay in
+    * DuckDB — a full gate, stronger than the `agg_approx_hll` exact-twin
+    * pattern this follows.
     *
     * Output per query: candidates scanned (`n_cand`, the effort axis),
     * true-top-10 hits (`n_hits`), `recall_x100`, and the corpus-level
@@ -2243,9 +2243,15 @@ object SimilarityQueries {
     // (i, j) pair: pos = i·d − i·(i−1)/2 + (j − i), row-major upper
     // triangle. posexplode skips null arrays exactly as explode did, and
     // multiplyExact inside the expression matches the ANSI-multiply
-    // semantics of the lambda form.
+    // semantics of the lambda form. A vector whose length is not Dim
+    // raises in the same stage: its products would otherwise land in the
+    // wrong (i, j) cells, or past the posMap and out of the join.
+    val v = col("v")
+    val checked = when(v.isNull || size(v) === lit(Dim), v)
+      .otherwise(raise_error(concat(lit("gramTriangle: vector length "),
+        size(v).cast("string"), lit(s" != Dim = $Dim"))))
     val agg = vx
-      .select(posexplode(call_function("gram_products", col("v")))
+      .select(posexplode(call_function("gram_products", checked))
         .as(Seq("pos", "p")))
       .groupBy("pos")
       .agg(count(lit(1)).as("n"), sum(col("p")).as("s"))

@@ -42,9 +42,8 @@ object StreamingQueries {
     Staging.dir(kind, dir)(build)
 
   /** The staged-events stream contract: the ONE schema every staged file
-    * is written with and every staged stream reads with (StreamingDemo
-    * reuses both, so the demo cannot fork from the gate's contract). */
-  private[graft] val StagedEventsSchema =
+    * is written with and every staged stream reads with. */
+  private val StagedEventsSchema =
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
 
   /** Rewrite the events table into `out` under `Tables`' NORMALIZED schema
@@ -54,7 +53,7 @@ object StreamingQueries {
     * silently mis-scaled a forced-BIGINT read by 1000×) never reaches the
     * stream's fixed schema. Columns are selected in [[StagedEventsSchema]]
     * order; one coalesced file keeps listing + micro-batching cheap. */
-  private[graft] def normalizedEventsWrite(s: SparkSession, dir: String,
+  private def normalizedEventsWrite(s: SparkSession, dir: String,
       out: java.nio.file.Path): Unit =
     Tables(s, dir, "events")
       .select(StagedEventsSchema.split(",").map(c => col(c.trim.split(" ")(0))): _*)

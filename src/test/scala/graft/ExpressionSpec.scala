@@ -387,8 +387,8 @@ class ExpressionSpec extends AnyFunSuite {
         s"id=${r.getLong(0)}: gram_products != lambda triangle")
     }
     // gramTriangle end-to-end: (i, j, n, s) over the same rows must equal
-    // the definition computed in pure Scala — this exercises the sqrt-based
-    // position inversion at EVERY pos in [0, d(d+1)/2)
+    // the definition computed in pure Scala — this exercises the literal
+    // posMap inversion (pos → (i, j)) at EVERY pos in [0, d(d+1)/2)
     val expected = {
       val acc = scala.collection.mutable.Map.empty[(Long, Long), (Long, Long)]
       rows.foreach { case (_, v) =>
@@ -426,6 +426,22 @@ class ExpressionSpec extends AnyFunSuite {
     val nullArr = spark.sql("SELECT gram_products(CAST(NULL AS ARRAY<BIGINT>)) AS g")
       .collect().head
     assert(nullArr.isNullAt(0))
+    // gramTriangle skips a null vector (its rows carry n = 1, not 2) and
+    // raises on a vector of the wrong length instead of mis-filing or
+    // dropping its products
+    val ok = Seq.fill(d)(1L)
+    val tri = queries.SimilarityQueries.gramTriangle(
+      Seq(Some(ok), None).toDF("v")).collect()
+    assert(tri.length == d * (d + 1) / 2 && tri.forall(_.getLong(2) == 1L))
+    for (len <- Seq(d - 1, d + 1)) {
+      val thrown3 = intercept[Exception] {
+        queries.SimilarityQueries.gramTriangle(
+          Seq(ok, Seq.fill(len)(1L)).toDF("v")).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](thrown3)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString(" | ")
+      assert(msgs.contains(s"vector length $len"), s"len=$len: $msgs")
+    }
   }
 
   test("every native expression COMPILES under CODEGEN_ONLY (no silent fallback)") {

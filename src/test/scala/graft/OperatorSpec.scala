@@ -436,19 +436,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(KMeans.kFor(Long.MaxValue) == (1 << 22), "capped")
   }
 
-  test("MinHashLSH: typed SigAggregator equals the explode+min production shape") {
-    import graft.operators.MinHashLSH
-    val docs = graft.queries.Tables(spark, TestSpark.sfSmoke, "documents")
-    val viaMin = MinHashLSH.signatures(docs)
-      .select("doc_id", "sig").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaAgg = MinHashLSH.signaturesViaAggregator(docs)
-      .select("doc_id", "sig").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaMin.nonEmpty && viaAgg == viaMin,
-      s"aggregator shape must be bit-identical (${viaMin.size} docs)")
-  }
-
   test("TriangleCount: planted cliques, chain, star; canonicalization; exactly-once") {
     import spark.implicits._
     // K4 on {1..4}: 4 triangles, each node in C(3,2)=3; a disjoint triangle
