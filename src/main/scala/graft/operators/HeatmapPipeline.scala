@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, MapType, StringType}
 import graft.functions.TileFunctions
+import graft.tiles.TileMath
 
 /** The reference's batch pipeline (heatmap.py `batchMain`, lines 152–158) as
   * a composable Spark-native API: a user of the reference can point this at
@@ -10,10 +12,13 @@ import graft.functions.TileFunctions
   * timestamp — FIXTURES.md §A) and get the same `heatmaps` output shape
   * (id = "group|timespan|rsTile", heatmap = JSON {fineTileId: count}).
   *
+  * The zoom rollup, the blob byte format and the blob merge live only here;
+  * the `hm_*` and `stream_hm_*` catalog entries call them.
+  *
   * Differences from the reference, all deliberate:
-  *   - single-pass pyramid (explode ancestors + ONE aggregation) instead of
-  *     16 chained reduceByKey/groupByKey rounds — 1 shuffle vs 32
-  *     (SURVEY.md §4.4.2);
+  *   - two-phase pyramid (fine pre-aggregation + explode ancestors and ONE
+  *     rollup aggregation) instead of 16 chained reduceByKey/groupByKey
+  *     rounds — 2 shuffles vs 32 (SURVEY.md §4.4.2);
   *   - intended user-group semantics: the fan-out applies exactly once, so
   *     `all`-group counts equal raw counts at every level, instead of the
   *     reference's exponential double-count (verified defect,
@@ -24,42 +29,43 @@ import graft.functions.TileFunctions
   *   - source/sink are any DataFrame reader/writer (the reference hardcodes
   *     Cassandra, heatmap.py:131–150).
   *
-  * Scale: the one aggregation shuffles (group, timespan, zoom, tile) keys
+  * Scale: the aggregations shuffle (group, timespan, zoom, tile) keys
   * with map-side combine; the `all` hot key is AQE-skew-splittable because
   * counts are decomposable sums (SURVEY.md §7.4).
   */
 object HeatmapPipeline {
 
-  /** Column bindings for a `locations`-shaped input. */
-  final case class Config(
-      lat: Column = col("latitude"),
-      lon: Column = col("longitude"),
-      source: Column = col("source"),
-      userId: Column = col("user_id"),
-      ts: Column = col("timestamp"),
-      fineZoom: Int = 21,          // MAX_ZOOM 16 + DETAIL_ZOOM_DELTA 5 (heatmap.py:16–17)
-      coarseZoom: Int = 6,         // pyramid floor (heatmap.py:110)
-      detailZoomDelta: Int = 5,    // result-set tile offset (heatmap.py:17)
-      dropSource: String = "background", // heatmap.py:28
-      timespans: Boolean = false)  // enable month/day labels (alltime always on)
+  /** Pyramid floor: zooms fineZoom → 6 (heatmap.py:110). */
+  val CoarseZoom = 6
 
-  /** Stage 1 — op #3 (heatmap.py:25–36): drop excluded sources, quantize to
-    * the fine zoom, emit one observation per point with count 1.0. */
+  /** Settings over a `locations`-shaped input. */
+  final case class Config(
+      fineZoom: Int = TileMath.FineZoom, // MAX_ZOOM 16 + DETAIL_ZOOM_DELTA 5 (heatmap.py:16–17)
+      timespans: Boolean = false) {      // enable month/day labels (alltime always on)
+    val coarseZoom: Int = CoarseZoom
+    val detailZoomDelta: Int = TileMath.DetailZoomDelta // result-set tile offset (heatmap.py:17)
+  }
+
+  /** `c`, or a job failure when null: concat_ws would silently drop the null
+    * segment from the blob id (the reference raises a TypeError). */
+  private def required(c: String, what: String = ""): Column =
+    when(col(c).isNull, raise_error(lit(s"HeatmapPipeline: null $c$what"))).otherwise(col(c))
+
+  /** Stage 1 — op #3 (heatmap.py:25–36): drop background points (a null
+    * source is kept, as in the reference's `source == "background"` test),
+    * quantize to the fine zoom, emit one observation per point with count
+    * 1.0. */
   def observations(locations: DataFrame, cfg: Config = Config()): DataFrame = {
     val base = locations
-      .filter(cfg.source =!= cfg.dropSource)
+      .filter(!(col("source") <=> "background"))
       .select(
-        TileFunctions.tileRow(cfg.lat, cfg.fineZoom).as("fine_row"),
-        TileFunctions.tileCol(cfg.lon, cfg.fineZoom).as("fine_col"),
-        cfg.userId.cast("string").as("user_id"),
+        TileFunctions.tileRow(required("latitude"), cfg.fineZoom).as("fine_row"),
+        TileFunctions.tileCol(required("longitude"), cfg.fineZoom).as("fine_col"),
+        col("user_id").cast("string").as("user_id"),
         (if (cfg.timespans) {
-          // a null timestamp cannot be bucketed: fail loudly, because the
-          // silent alternative emits TWO null-timespan rows per point
-          // (double-counting) and concat_ws later drops the null segment,
-          // producing malformed 2-part blob ids downstream
-          val ts = when(cfg.ts.isNull, raise_error(lit(
-            "HeatmapPipeline: null timestamp with timespans enabled")))
-            .otherwise(cfg.ts)
+          // a null timestamp would also emit TWO null-timespan rows per point
+          // (double-counting)
+          val ts = required("timestamp", " with timespans enabled")
           array(lit("alltime"), date_format(ts, "yyyy-MM"), date_format(ts, "yyyy-MM-dd"))
         } else array(lit("alltime"))).as("timespans"),
         lit(1.0).as("count"))
@@ -75,26 +81,44 @@ object HeatmapPipeline {
       .drop("timespans", "user_id")
   }
 
-  /** Stage 2 — ops #4–#10 in one pass: counts per (group, timespan, zoom,
-    * tile) for every zoom in [coarseZoom, fineZoom], via exact integer
-    * ancestor arithmetic on the single fine quantization. */
+  /** Both pyramid steps group by every column but the fine tile and count. */
+  private def groupKeys(df: DataFrame): Seq[Column] =
+    df.columns.toSeq.filterNot(Set("fine_row", "fine_col", "count")).map(col)
+
+  /** Stage 2 — ops #4–#10: counts per (keys, zoom, tile) for every zoom in
+    * [coarseZoom, fineZoom]. Pre-aggregates at the fine zoom first (the
+    * reference's level-from-level insight, heatmap.py:117): coarser levels
+    * derive from the much smaller fine aggregate, not from raw
+    * observations. Input: (keys…, fine_row, fine_col, count). */
   def pyramid(obs: DataFrame, cfg: Config = Config()): DataFrame =
-    obs
-      // pre-aggregate at the fine zoom first (the reference's level-from-
-      // level insight, heatmap.py:117): coarser levels derive from the much
-      // smaller fine aggregate, not from raw observations
-      .groupBy(col("user_group"), col("timespan"), col("fine_row"), col("fine_col"))
-      .agg(sum(col("count")).as("count"))
+    rollup(obs.groupBy(groupKeys(obs) :+ col("fine_row") :+ col("fine_col"): _*)
+      .agg(sum(col("count")).as("count")), cfg)
+
+  /** The zoom rollup of a fine-zoom count table (keys…, fine_row, fine_col,
+    * count) into (keys…, zoom, r, c, count): explode the zooms, derive each
+    * level's tile by exact integer shift, aggregate once. */
+  def rollup(fine: DataFrame, cfg: Config = Config()): DataFrame =
+    fine
       .withColumn("zoom", explode(sequence(lit(cfg.coarseZoom), lit(cfg.fineZoom))))
-      .groupBy(col("user_group"), col("timespan"), col("zoom"),
+      .groupBy(groupKeys(fine) ++ Seq(col("zoom"),
         expr(s"shiftright(fine_row, ${cfg.fineZoom} - zoom)").as("r"),
-        expr(s"shiftright(fine_col, ${cfg.fineZoom} - zoom)").as("c"))
+        expr(s"shiftright(fine_col, ${cfg.fineZoom} - zoom)").as("c")): _*)
       .agg(sum(col("count")).as("count"))
 
+  /** THE blob byte format, one `"tileId":count` entry; every blob producer
+    * renders through it and [[blobJson]], so merge == recompute and
+    * stream == batch hold byte for byte. */
+  def blobEntryJson(tileId: Column, cnt: Column): Column =
+    concat(lit("\""), tileId, lit("\":"), cnt.cast("string"))
+
+  /** `{entry,…}`, sorted: sorting rendered entries sorts by key, because the
+    * closing `"` (0x22) precedes every key character. */
+  def blobJson(entries: Column): Column =
+    concat(lit("{"), array_join(array_sort(entries), ","), lit("}"))
+
   /** Stage 3 — ops #6–#7, #11–#12 (heatmap.py:79–90, 120–129, 157): package
-    * each zoom level into result-set blobs keyed 5 zooms coarser; `heatmap`
-    * is canonical JSON {fineTileId: count} with sorted keys via native
-    * MapType + to_json. */
+    * each zoom level into result-set blobs keyed `detailZoomDelta` zooms
+    * coarser. Input: (user_group, timespan, zoom, r, c, count). */
   def resultSetBlobs(pyr: DataFrame, cfg: Config = Config()): DataFrame =
     pyr
       .filter(col("zoom") - cfg.detailZoomDelta >= 0)
@@ -103,9 +127,8 @@ object HeatmapPipeline {
         concat_ws("_", col("zoom") - cfg.detailZoomDelta,
           expr(s"shiftright(r, ${cfg.detailZoomDelta})"),
           expr(s"shiftright(c, ${cfg.detailZoomDelta})")).as("rs_tile"))
-      .agg(to_json(map_from_entries(array_sort(collect_list(
-        struct(concat_ws("_", col("zoom"), col("r"), col("c")), col("count"))))))
-        .as("heatmap"))
+      .agg(blobJson(collect_list(blobEntryJson(
+        concat_ws("_", col("zoom"), col("r"), col("c")), col("count")))).as("heatmap"))
       .select(concat_ws("|", col("user_group"), col("timespan"), col("rs_tile")).as("id"),
         col("heatmap"))
 
@@ -116,17 +139,21 @@ object HeatmapPipeline {
   /** Incremental maintenance — the reference's read-add-write-back append
     * (heatmap.py:149–150) without recomputing the base period: merge two
     * blob tables of [[run]]'s output shape by summing per-fine-tile counts
-    * over the key union (full-outer on blob id, `map_zip_with`), then
-    * re-serialize through the SAME sorted-map construction as
-    * [[resultSetBlobs]], so merged blobs are byte-identical to recomputed
-    * ones. Counts are decomposable sums, so `merge(run(A), run(B)) ==
-    * run(A ∪ B)` for ANY disjoint row split — associative and commutative,
-    * fold daily deltas in any order (HeatmapPipelineSpec pins a 3-way
-    * fold; the oracle-gated `hm_blob_merge` pins the corpus-scale variant).
-    * At 100 TB the left side is the stored blob table read back from the
-    * sink; only the delta touches raw locations. */
-  def mergeBlobs(base: DataFrame, delta: DataFrame): DataFrame = {
-    val mapType = org.apache.spark.sql.types.DataType.fromDDL("map<string,double>")
+    * over the key union (full-outer on blob id), then re-serialize through
+    * [[blobJson]], so merged blobs are byte-identical to recomputed ones.
+    * Counts are decomposable sums, so
+    * `merge(run(A), run(B)) == run(A ∪ B)` for ANY disjoint row split —
+    * associative and commutative, fold daily deltas in any order
+    * (HeatmapPipelineSpec pins a 3-way fold; the oracle-gated
+    * `hm_blob_merge` pins the corpus-scale variant). At 100 TB the left side
+    * is the stored blob table read back from the sink; only the delta
+    * touches raw locations.
+    *
+    * `countType`: double for [[run]]'s blobs (the reference's
+    * `{tile: 2.0}`), bigint for the catalog's (`{tile: 2}`). */
+  def mergeBlobs(base: DataFrame, delta: DataFrame,
+      countType: DataType = DoubleType): DataFrame = {
+    val mapType = MapType(StringType, countType)
     // a malformed blob must FAIL the job, not vanish: from_json returns null
     // on parse failure, and a null map would silently null the merged row —
     // on a corrupt blob store that is data loss disguised as success
@@ -135,13 +162,13 @@ object HeatmapPipeline {
       when(m.isNull, raise_error(concat(lit("mergeBlobs: malformed blob JSON for id "),
         col("id"), lit(": "), c))).otherwise(m)
     }
+    val zero = lit(0).cast(countType)
     val merged = map_zip_with(parsed(col("hb")), parsed(col("hd")),
-      (_, v1, v2) => coalesce(v1, lit(0.0)) + coalesce(v2, lit(0.0)))
+      (_, v1, v2) => coalesce(v1, zero) + coalesce(v2, zero))
     base.select(col("id"), col("heatmap").as("hb"))
       .join(delta.select(col("id"), col("heatmap").as("hd")), Seq("id"), "full_outer")
       .select(col("id"),
-        // map_zip_with appends right-only keys AFTER the left's — re-sort
-        // entries so the JSON key order matches resultSetBlobs' writer
-        to_json(map_from_entries(array_sort(map_entries(merged)))).as("heatmap"))
+        blobJson(transform(map_entries(merged),
+          e => blobEntryJson(e.getField("key"), e.getField("value")))).as("heatmap"))
   }
 }

@@ -2,8 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.functions.TileFunctions
 import graft.functions.TileFunctions.{Sql => T}
+import graft.operators.HeatmapPipeline
+import graft.operators.HeatmapPipeline.{blobEntryJson, blobJson}
 
 /** The reference pipeline's query surface, re-expressed Spark-first.
   *
@@ -14,11 +17,18 @@ import graft.functions.TileFunctions.{Sql => T}
   *
   *   - ONE Mercator quantization at the fine zoom (transcendental math once),
   *   - pyramid levels derived by exact integer shifts (`row >> (fine-z)`),
-  *     exploded in a single generator → ONE hash aggregation / shuffle,
+  *     exploded in a single generator over the fine pre-aggregate → two
+  *     hash aggregations / shuffles in total,
   *   - user-group / timespan fan-out via `explode` (Catalyst Generate),
   *   - the result-set JSON blob via sorted `collect_list` + string concat.
   *
-  * Scale notes (100 TB): the single groupBy shuffles (group, timespan, zoom,
+  * The zoom rollup, the blob byte format and the blob merge are not
+  * written here: the entries call [[graft.operators.HeatmapPipeline]]'s
+  * `pyramid`, `blobEntryJson`/`blobJson` and `mergeBlobs`, the one copy of
+  * each law. What stays here is the corpus side: the synthetic lat/lon, the
+  * integer-coded fan and its label decoders, and the DuckDB oracles.
+  *
+  * Scale notes (100 TB): each groupBy shuffles (group, timespan, zoom,
   * tile) keys — partial aggregation (map-side combine) collapses the ~32×
   * fan-out before the exchange, and AQE handles the `all`-group skew
   * (SURVEY.md §7.4). Intended semantics per SURVEY.md §2.11 — every level's
@@ -39,7 +49,6 @@ object HeatmapQueries {
   // (MaxZoom 16 + DetailZoomDelta 5, heatmap.py:16–17) — a literal here
   // could silently drift from TileMath's arithmetic
   val FineZoom: Int = graft.tiles.TileMath.FineZoom
-  val CoarseZoom = 6 // pyramid floor: zooms 21 → 6, 16 levels (heatmap.py:110)
 
   // --- synthetic geo lattice: lat in [-80, 79.9] step .1, lon in [-180, 179.9]
   def latCol: Column = (col("event_id") * 37 % 1600) / lit(10.0) - lit(80.0)
@@ -170,10 +179,11 @@ object HeatmapQueries {
           concat_ws("_", lit(10), col("r"), col("c")).as("tile_id"), col("cnt"))
         .orderBy("user_group", "tile_id"))
 
-  /** The full 16-level pyramid (ops #4–#10, heatmap.py:107–118) in ONE pass:
-    * quantize once at z21, explode zooms 6..21, derive each level's tile by
-    * integer shift, aggregate once. Replaces the reference's 32 shuffles with
-    * a single partial+final HashAggregate (SURVEY.md §4.4.2). */
+  /** The full 16-level pyramid (ops #4–#10, heatmap.py:107–118) through
+    * [[HeatmapPipeline.pyramid]]: quantize once at z21, pre-aggregate at the
+    * fine zoom, explode zooms 6..21 over the fine aggregate, derive each
+    * level's tile by integer shift, aggregate again. Two partial+final
+    * HashAggregates replace the reference's 32 shuffles (SURVEY.md §4.4.2). */
   val hmPyramid = QuerySpec(
     "hm_pyramid",
     "16-level tile pyramid, groups × timespans, two-phase (fine pre-agg + zoom rollup)",
@@ -186,7 +196,7 @@ object HeatmapQueries {
             |SELECT user_group, timespan, zoom,
             |  CONCAT_WS('_', zoom, fine_row >> ($FineZoom - zoom), fine_col >> ($FineZoom - zoom)) AS tile_id,
             |  CAST(COUNT(*) AS BIGINT) AS cnt
-            |FROM quant CROSS JOIN (SELECT CAST(UNNEST(GENERATE_SERIES($CoarseZoom, $FineZoom)) AS INT) AS zoom)
+            |FROM quant CROSS JOIN (SELECT CAST(UNNEST(GENERATE_SERIES(${HeatmapPipeline.CoarseZoom}, $FineZoom)) AS INT) AS zoom)
             |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2, 3, 4""".stripMargin),
     (s, dir) => {
       // ALL group keys are integers through the shuffle — user group encodes
@@ -195,24 +205,17 @@ object HeatmapQueries {
       // are rendered only on aggregated output. The pre-aggregation stream
       // carries 5 longs/row instead of 3 strings + 2 longs, which at sf0.1
       // cuts both shuffle bytes and hash-aggregation cost materially.
-      intFan(s, dir, timespans = true)
-        // phase 1: pre-aggregate at the fine zoom — the level-from-level
-        // insight of the reference (heatmap.py:117) done right: coarser
-        // levels derive from the (much smaller) fine aggregate, and at real
-        // GPS point density this collapse is dramatic
-        .groupBy(col("ugi"), col("tsi"),
+      val obs = intFan(s, dir, timespans = true)
+        .select(col("ugi"), col("tsi"),
           TileFunctions.tileRow(col("lat"), FineZoom).as("fine_row"),
-          TileFunctions.tileCol(col("lon"), FineZoom).as("fine_col"))
-        .agg(count(lit(1)).as("c0"))
-        // phase 2: explode the zoom dimension over the fine aggregate
-        .withColumn("zoom", explode(sequence(lit(CoarseZoom), lit(FineZoom))))
-        .groupBy(col("ugi"), col("tsi"), col("zoom"),
-          expr(s"shiftright(fine_row, $FineZoom - zoom)").as("r"),
-          expr(s"shiftright(fine_col, $FineZoom - zoom)").as("c"))
-        .agg(sum(col("c0")).as("cnt"))
+          TileFunctions.tileCol(col("lon"), FineZoom).as("fine_col"),
+          lit(1L).as("count"))
+      // the library pyramid: fine pre-aggregation, then the zoom rollup
+      HeatmapPipeline.pyramid(obs, HeatmapPipeline.Config(fineZoom = FineZoom))
         .select(decodeUgi("ugi").as("user_group"), decodeTsi("tsi").as("timespan"),
           col("zoom"),
-          concat_ws("_", col("zoom"), col("r"), col("c")).as("tile_id"), col("cnt"))
+          concat_ws("_", col("zoom"), col("r"), col("c")).as("tile_id"),
+          col("count").as("cnt"))
         .orderBy("user_group", "timespan", "zoom", "tile_id")
     })
 
@@ -222,20 +225,6 @@ object HeatmapQueries {
     * oracle's `WHERE timespan = 'alltime'` placement; a post-aggregation
     * `LIKE` on the composite id is NOT pushable through the groupBy and
     * would do 3× the work). */
-  /** THE blob JSON byte format, in one place: every blob producer —
-    * [[blobsDf]], [[hmBlobMerge]]'s re-serialization, and
-    * `stream_hm_blobs`' publication step — builds entries with
-    * [[blobEntryJson]] and wraps them with [[blobJson]], so the byte-
-    * identity contracts between them (merge == recompute, stream == batch)
-    * cannot drift by editing one copy. Sorting the RENDERED entries equals
-    * sorting by key: the closing `"` (0x22) precedes every key character,
-    * so the quote terminates comparison before the count can matter. */
-  def blobEntryJson(tileId: Column, cnt: Column): Column =
-    concat(lit("\""), tileId, lit("\":"), cnt.cast("string"))
-
-  def blobJson(entries: Column): Column =
-    concat(lit("{"), array_join(array_sort(entries), ","), lit("}"))
-
   private def blobsDf(s: SparkSession, dir: String, alltimeOnly: Boolean,
       where: Column = lit(true)): DataFrame = {
     val fan =
@@ -293,42 +282,21 @@ object HeatmapQueries {
     * recompute is the exact oracle (counts are additive over any row
     * partition, so the oracle holds for EVERY split predicate).
     *
-    * The merge itself is the operator under test: full-outer join on blob id
-    * → `from_json` both serialized maps → `map_zip_with` summing counts over
-    * the key union → re-serialize sorted. Byte-compatibility of the
-    * re-serialization with [[blobsDf]]'s writer is what makes merged blobs
-    * indistinguishable from recomputed ones (the `"` terminator sorts quoted
-    * keys identically to raw keys — 0x22 precedes every key character). */
+    * The merge itself is the operator under test:
+    * [[HeatmapPipeline.mergeBlobs]] with bigint counts, re-serializing
+    * through the same `blobJson` as [[blobsDf]]'s writer. */
   val hmBlobMerge = QuerySpec(
     "hm_blob_merge",
     "incremental blob maintenance: base-period blobs + delta-period blobs merged",
     Some(blobsOracleSql),
     (s, dir) => {
-      val mapType = org.apache.spark.sql.types.DataType.fromDDL("map<string,bigint>")
       // coalesce makes the predicate two-valued so base/delta are an EXACT
       // partition: a null ts would otherwise fall out of BOTH sides (the
       // filters evaluate to NULL) and silently undercount vs the oracle
       val inBase = coalesce(col("ts") < lit("2024-01-21").cast("timestamp"), lit(false))
       val base = blobsDf(s, dir, alltimeOnly = false, inBase)
       val delta = blobsDf(s, dir, alltimeOnly = false, !inBase)
-      // malformed-blob guard, same contract as HeatmapPipeline.mergeBlobs:
-      // from_json nulls on parse failure, and a null map would null the
-      // merged row — data loss disguised as success on a corrupt store
-      def parsed(c: Column): Column = {
-        val m = from_json(coalesce(c, lit("{}")), mapType)
-        when(m.isNull, raise_error(concat(
-          lit("hm_blob_merge: malformed blob JSON for id "), col("id"), lit(": "), c)))
-          .otherwise(m)
-      }
-      val merged = map_zip_with(parsed(col("hb")), parsed(col("hd")),
-        (_, v1, v2) => coalesce(v1, lit(0L)) + coalesce(v2, lit(0L)))
-      base.select(col("id"), col("heatmap").as("hb"))
-        .join(delta.select(col("id"), col("heatmap").as("hd")), Seq("id"), "full_outer")
-        .select(col("id"),
-          blobJson(transform(map_entries(merged),
-            e => blobEntryJson(e.getField("key"), e.getField("value"))))
-            .as("heatmap"))
-        .orderBy("id")
+      HeatmapPipeline.mergeBlobs(base, delta, LongType).orderBy("id")
     })
 
   /** Tile-id navigation ops (tile.py:60–98): decode, parent, result-set
@@ -405,12 +373,10 @@ object HeatmapQueries {
          |FROM pyr WHERE zoom - 5 >= 0
          |GROUP BY 1 ORDER BY 1""".stripMargin
     },
-    (s, dir) => {
-      import graft.operators.HeatmapPipeline
+    (s, dir) =>
       HeatmapPipeline.run(locationsFromEvents(s, dir),
-        HeatmapPipeline.Config(fineZoom = 12, coarseZoom = 6, timespans = true))
-        .orderBy("id")
-    })
+        HeatmapPipeline.Config(fineZoom = 12, timespans = true))
+        .orderBy("id"))
 
   /** The corpus events mapped to the reference's `locations` contract
     * (closed-form lat/lon, view→background, x/rt user prefixes) — the input

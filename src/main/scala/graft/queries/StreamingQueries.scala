@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.TileFunctions
 import graft.functions.TileFunctions.{Sql => T}
+import graft.operators.HeatmapPipeline
 import graft.streaming.StreamingOps
 
 /** Oracle-checked STREAMING executions — unlike graft.streaming's unit
@@ -355,13 +356,11 @@ object StreamingQueries {
           TileFunctions.tileCol(col("lon"), 12).as("c"))
         .agg(count(lit(1)).as("cnt"))
       val counts = runToSink(countsStream, "complete", "stream_hm_blobs_sink")
-      counts
-        .groupBy(col("user_group"),
-          expr("shiftright(r, 5)").as("rsr"), expr("shiftright(c, 5)").as("rsc"))
-        .agg(HeatmapQueries.blobJson(collect_list(HeatmapQueries.blobEntryJson(
-          concat_ws("_", lit(12), col("r"), col("c")), col("cnt")))).as("heatmap"))
-        .select(concat_ws("|", col("user_group"), lit("alltime"),
-          concat_ws("_", lit(7), col("rsr"), col("rsc"))).as("id"), col("heatmap"))
+      // published through the library's blob packer: the constant alltime
+      // timespan and z12 level give the batch table's ids and entries
+      HeatmapPipeline.resultSetBlobs(counts.select(col("user_group"),
+        lit("alltime").as("timespan"), lit(12).as("zoom"), col("r"), col("c"),
+        col("cnt").as("count")))
         .orderBy("id")
     })
 
@@ -1179,12 +1178,13 @@ object StreamingQueries {
     * exactly: the STREAM maintains only the FINE-zoom tile counts (a
     * stateful aggregation on two integer keys — the minimal state any
     * pyramid view needs, 1/16th of the published surface), and the 15
-    * coarser levels derive at PUBLICATION by the same zoom-explode +
-    * shiftright rollup as `hm_pyramid` phase 2 (the `stream_decay`
-    * publication-step precedent). Batch-equivalent by construction: the
-    * published rollup is a deterministic function of the fine aggregate,
-    * which the streaming agg maintains exactly; the oracle computes the
-    * identical all-users/alltime pyramid over the table at rest. */
+    * coarser levels derive at PUBLICATION through
+    * [[HeatmapPipeline.rollup]], the same zoom rollup as `hm_pyramid` (the
+    * `stream_decay` publication-step precedent). Batch-equivalent by
+    * construction: the published rollup is a deterministic function of the
+    * fine aggregate, which the streaming agg maintains exactly; the oracle
+    * computes the identical all-users/alltime pyramid over the table at
+    * rest. */
   val streamHmPyramid = QuerySpec(
     "stream_hm_pyramid",
     "streaming 16-level pyramid: fine-tile counts as stream state, zoom rollup at publication",
@@ -1201,10 +1201,9 @@ object StreamingQueries {
             |    fine_col >> (${HeatmapQueries.FineZoom} - zoom)) AS tile_id,
             |  CAST(SUM(c0) AS BIGINT) AS cnt
             |FROM fine CROSS JOIN (SELECT CAST(UNNEST(GENERATE_SERIES(
-            |    ${HeatmapQueries.CoarseZoom}, ${HeatmapQueries.FineZoom})) AS INT) AS zoom)
+            |    ${HeatmapPipeline.CoarseZoom}, ${HeatmapQueries.FineZoom})) AS INT) AS zoom)
             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     (s, dir) => {
-      import graft.functions.TileFunctions
       val fz = HeatmapQueries.FineZoom
       val fine = runToSink(
         streamEvents(s, dir)
@@ -1212,17 +1211,12 @@ object StreamingQueries {
           .groupBy(
             TileFunctions.tileRow(HeatmapQueries.latCol, fz).as("fine_row"),
             TileFunctions.tileCol(HeatmapQueries.lonCol, fz).as("fine_col"))
-          .agg(count(lit(1)).as("c0")),
+          .agg(count(lit(1)).as("count")),
         "complete", "stream_hm_pyramid_sink")
-      fine
-        .withColumn("zoom",
-          explode(sequence(lit(HeatmapQueries.CoarseZoom), lit(fz))))
-        .groupBy(col("zoom"),
-          expr(s"shiftright(fine_row, $fz - zoom)").as("r"),
-          expr(s"shiftright(fine_col, $fz - zoom)").as("c"))
-        .agg(sum(col("c0")).as("cnt"))
+      HeatmapPipeline.rollup(fine, HeatmapPipeline.Config(fineZoom = fz))
         .select(col("zoom"),
-          concat_ws("_", col("zoom"), col("r"), col("c")).as("tile_id"), col("cnt"))
+          concat_ws("_", col("zoom"), col("r"), col("c")).as("tile_id"),
+          col("count").as("cnt"))
         .orderBy("zoom", "tile_id")
     })
 

@@ -20,8 +20,8 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
   WriterCommitMessage}
-import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNotNull, IsNull,
-  Not}
+import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In, IsNotNull,
+  IsNull, Not}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -202,7 +202,8 @@ class GraftLocationsScanBuilder(path: String, store: GraftStore)
   /** Accepts string-typed equality and null tests — exactly the predicates
     * the line reader can evaluate on raw fields with engine-identical
     * semantics (3-valued logic: a NULL predicate drops the row, so
-    * `Not(EqualTo)` keeps only non-null differing values). Everything else
+    * `Not(EqualTo)` keeps only non-null differing values, while the
+    * null-safe `Not(EqualNullSafe)` also keeps nulls). Everything else
     * stays residual and Spark evaluates it after the scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (sup, residual) = filters.partition(LineFilter.supports(store, _))
@@ -299,6 +300,7 @@ object LineFilter {
   def supports(store: GraftStore, f: Filter): Boolean = f match {
     case EqualTo(a, v: String) => stringCol(store, a) && v != null
     case Not(EqualTo(a, v: String)) => stringCol(store, a) && v != null
+    case Not(EqualNullSafe(a, v: String)) => stringCol(store, a) && v != null
     case In(a, vs) => stringCol(store, a) && vs != null &&
       vs.forall(_.isInstanceOf[String])
     case IsNotNull(a) => store.schema.fieldNames.contains(a)
@@ -311,6 +313,7 @@ object LineFilter {
     f match {
       case EqualTo(a, v: String) => field(a).contains(v)
       case Not(EqualTo(a, v: String)) => field(a).exists(_ != v)
+      case Not(EqualNullSafe(a, v: String)) => !field(a).contains(v)
       case In(a, vs) => field(a).exists(x => vs.contains(x))
       case IsNotNull(a) => field(a).isDefined
       case IsNull(a) => field(a).isEmpty

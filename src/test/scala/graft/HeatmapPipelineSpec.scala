@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 import graft.operators.HeatmapPipeline
 
 /** End-to-end semantics of the reference-shaped pipeline on real lat/lon
@@ -24,10 +26,29 @@ class HeatmapPipelineSpec extends AnyFunSuite {
       // rt- user collapses into 'route'
       (40.7128, -74.0060, "gps", "rt-7", 1700000004000L),
       // background rows are dropped entirely
-      (47.6062, -122.3321, "background", "alice", 1700000005000L)
+      (47.6062, -122.3321, "background", "alice", 1700000005000L),
+      // a null source is not "background": the point is kept
+      (47.6162, -122.3421, null, "bob", 1700000006000L)
     ).toDF("latitude", "longitude", "source", "user_id", "timestamp")
       .withColumn("timestamp", timestamp_millis(col("timestamp")))
   }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  private def failsWith(msg: String)(body: => Any): Unit = {
+    val ex = intercept[Exception](body)
+    assert(causes(ex).exists(c => Option(c.getMessage).exists(_.contains(msg))),
+      s"expected '$msg', got: $ex")
+  }
+
+  private def canon(df: DataFrame): Seq[(String, String)] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+
+  /** `run` with the counts kept as bigint, the catalog's blob flavour. */
+  private def runLong(locs: DataFrame): DataFrame =
+    HeatmapPipeline.resultSetBlobs(HeatmapPipeline.pyramid(
+      HeatmapPipeline.observations(locs).withColumn("count", col("count").cast("long"))))
 
   test("golden: alice's z10 result-set blob matches the reference fixture") {
     val out = HeatmapPipeline.run(locations).collect()
@@ -39,8 +60,8 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     val obs = HeatmapPipeline.observations(locations)
     val groups = obs.select("user_group").distinct().collect().map(_.getString(0)).toSet
     assert(groups == Set("all", "alice", "bob", "route"))
-    // 'all' includes the xsecret point: 5 non-background rows
-    assert(obs.filter(col("user_group") === "all").count() == 5)
+    // 'all' includes the xsecret and the null-source points: 6 rows
+    assert(obs.filter(col("user_group") === "all").count() == 6)
   }
 
   test("pyramid-sum invariant holds for every group at every zoom") {
@@ -48,8 +69,9 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     val totals = pyr.groupBy("user_group", "zoom").agg(sum("count").as("t"))
       .groupBy("user_group").agg(countDistinct("t").as("n"), first("t").as("t"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(totals("all") == (1L, 5.0))
+    assert(totals("all") == (1L, 6.0))
     assert(totals("alice") == (1L, 2.0))
+    assert(totals("bob") == (1L, 2.0))
     assert(totals("route") == (1L, 1.0))
   }
 
@@ -68,32 +90,63 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     // disjoint periods, run the pipeline per period, fold the blob tables —
     // the result must equal run() on everything, byte for byte (same ids,
     // same JSON key order, same rendered counts). Period 2 is EMPTY to
-    // exercise the identity case.
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
-      df.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+    // exercise the identity case. Both count types: the pipeline's double
+    // blobs and the catalog's bigint ones.
     val p1 = locations.filter(col("timestamp") < timestamp_millis(lit(1700000002000L)))
     val p2 = locations.filter(lit(false))
     val p3 = locations.filter(col("timestamp") >= timestamp_millis(lit(1700000002000L)))
-    val folded = Seq(p2, p3).foldLeft(HeatmapPipeline.run(p1)) { (acc, p) =>
-      HeatmapPipeline.mergeBlobs(acc, HeatmapPipeline.run(p))
+    assert(canon(runLong(locations)).toMap.apply("alice|alltime|10_357_164") ==
+      """{"15_11443_5249":2}""")
+    for ((run, countType) <- Seq[(DataFrame => DataFrame, DataType)](
+        (HeatmapPipeline.run(_), DoubleType), (runLong, LongType))) {
+      val folded = Seq(p2, p3).foldLeft(run(p1)) { (acc, p) =>
+        HeatmapPipeline.mergeBlobs(acc, run(p), countType)
+      }
+      assert(canon(folded) == canon(run(locations)), s"$countType fold")
+      // commutativity: delta-first fold gives the same table
+      val reversed = HeatmapPipeline.mergeBlobs(run(p3), run(p1), countType)
+      assert(canon(reversed) == canon(run(locations)), s"$countType reversed")
     }
-    assert(canon(folded) == canon(HeatmapPipeline.run(locations)))
-    // commutativity: delta-first fold gives the same table
-    val reversed = HeatmapPipeline.mergeBlobs(HeatmapPipeline.run(p3),
-      HeatmapPipeline.run(p1))
-    assert(canon(reversed) == canon(HeatmapPipeline.run(locations)))
   }
 
   test("mergeBlobs: a malformed blob fails the job instead of vanishing") {
     import spark.implicits._
-    val good = Seq(("g|alltime|7_1_1", """{"12_32_32":1.0}""")).toDF("id", "heatmap")
     val corrupt = Seq(("g|alltime|7_1_1", """{"12_32_32":""")).toDF("id", "heatmap")
-    val ex = intercept[Exception] {
-      HeatmapPipeline.mergeBlobs(good, corrupt).collect()
+    for ((good, countType) <- Seq(("1.0", DoubleType), ("1", LongType))) {
+      val base = Seq(("g|alltime|7_1_1", s"""{"12_32_32":$good}""")).toDF("id", "heatmap")
+      failsWith("malformed blob JSON") {
+        HeatmapPipeline.mergeBlobs(base, corrupt, countType).collect()
+      }
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(ex).exists(c =>
-      Option(c.getMessage).exists(_.contains("malformed blob JSON"))), s"got: $ex")
+  }
+
+  test("a null latitude or longitude fails the job instead of writing a malformed blob") {
+    // concat_ws would drop the null row/col and store `all|alltime|16`;
+    // the reference's tile math raises on None
+    import spark.implicits._
+    for ((lat, lon, name) <- Seq((None, Some(-122.3321), "latitude"),
+        (Some(47.6062), None, "longitude"))) {
+      val bad = Seq((lat, lon, "gps", "alice", 1700000000000L))
+        .toDF("latitude", "longitude", "source", "user_id", "timestamp")
+        .withColumn("timestamp", timestamp_millis(col("timestamp")))
+      failsWith(s"null $name") {
+        HeatmapPipeline.run(locations.unionByName(bad)).collect()
+      }
+    }
+  }
+
+  test("rollup of a keyless fine table equals pyramid's 'all' group") {
+    // stream_hm_pyramid's shape at unit scale: a fine-tile count table with
+    // no group columns rolled up on its own
+    val obs = HeatmapPipeline.observations(locations)
+    val fine = obs.filter(col("user_group") === "all")
+      .groupBy("fine_row", "fine_col").agg(sum("count").as("count"))
+    val viaRollup = HeatmapPipeline.rollup(fine)
+    val viaPyramid = HeatmapPipeline.pyramid(obs)
+      .filter(col("user_group") === "all").drop("user_group", "timespan")
+    assert(viaRollup.columns.toSeq == viaPyramid.columns.toSeq)
+    val rows = viaRollup.collect().toSeq
+    assert(rows.nonEmpty)
+    assert(rows.sortBy(_.toString) == viaPyramid.collect().toSeq.sortBy(_.toString))
   }
 }

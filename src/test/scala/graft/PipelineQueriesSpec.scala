@@ -239,7 +239,7 @@ class PipelineQueriesSpec extends AnyFunSuite {
     // straddle every partition boundary.
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     import graft.operators.HeatmapPipeline
-    val cfg = HeatmapPipeline.Config(fineZoom = 12, coarseZoom = 6, timespans = true)
+    val cfg = HeatmapPipeline.Config(fineZoom = 12, timespans = true)
     val locations = graft.queries.HeatmapQueries.locationsFromEvents(spark, sf).cache()
     def canon(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
       df.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted

@@ -156,7 +156,8 @@ class StorageSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-push").toFile
     java.nio.file.Files.writeString(new java.io.File(dir, "a.loc").toPath,
       "47.6,-122.3,gps,alice,1700000000000\n40.7,-74.0,background,bob,1700000001000\n" +
-        "51.5,-0.1,background,,1700000002000\n35.7,139.7,wifi,dana,1700000003000\n")
+        "51.5,-0.1,background,,1700000002000\n35.7,139.7,wifi,dana,1700000003000\n" +
+        "10.0,20.0,,erin,1700000004000\n")
 
     val df = spark.read.format("graft-locations").load(dir.toString)
 
@@ -169,12 +170,20 @@ class StorageSpec extends AnyFunSuite {
     assert(ne.select("user_id").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("alice", "dana"))
 
+    // the pipeline's null-safe form keeps the null-source row, also pushed
+    val nns = df.filter(!(col("source") <=> "background"))
+    val nnsPlan = nns.queryExecution.executedPlan.toString
+    assert(nnsPlan.contains("Not(EqualNullSafe(source,background))"),
+      s"!(source <=> 'background') must be pushed into the scan:\n$nnsPlan")
+    assert(nns.select("user_id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("alice", "dana", "erin"))
+
     // equality + null tests, each vs an unpushed re-filter of the full read
     assert(df.filter(col("source") === "background").count() == 2)
     assert(df.filter(col("user_id").isNull).count() == 1)
-    assert(df.filter(col("user_id").isNotNull).count() == 3)
+    assert(df.filter(col("user_id").isNotNull).count() == 4)
     assert(df.filter(col("source").isin("gps", "wifi")).count() == 2)
-    assert(df.collect().length == 4, "unfiltered read still sees every row")
+    assert(df.collect().length == 5, "unfiltered read still sees every row")
 
     // unsupported predicates stay residual and still evaluate correctly
     assert(df.filter(col("latitude") > 45.0).count() == 2)
