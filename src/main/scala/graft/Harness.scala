@@ -25,9 +25,11 @@ object Harness {
   /** Drops what a query left cached. Builders persist() intermediates (LSH
     * signatures, IVF assignments); dropped between queries, caches don't
     * accumulate and LRU-evict a cache a later query depends on. RDD-level
-    * blocks (ConnectedComponents' labels localCheckpoint) sit outside the
-    * SQL cache manager and need the second call, or harness runs
-    * accumulate one orphaned cached RDD per pipeline_corpus/dedup query. */
+    * blocks (the localCheckpoints of ConnectedComponents' labels and of
+    * the pruned KMeans.fitCentroidTable's passes) sit outside the SQL
+    * cache manager and need the second call, or harness runs accumulate
+    * orphaned cached RDDs per pipeline_corpus, dedup and centroid-table
+    * k-means query. */
   def resetCaches(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

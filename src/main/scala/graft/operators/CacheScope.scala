@@ -34,7 +34,9 @@ final class CacheScope private (tracking: Boolean) {
 
   /** Register RDD-level cached blocks (e.g. a `localCheckpoint`'s — those
     * live OUTSIDE the SQL cache manager, so neither `clearCache()` nor the
-    * DataFrame path above reaches them; see [[ConnectedComponents]]). */
+    * DataFrame path above reaches them; see [[checkpoint]], which
+    * [[ConnectedComponents]] and the pruned [[KMeans.fitCentroidTable]]
+    * use). */
   private[graft] def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = synchronized {
     if (tracking) trackedRdds += rdd
   }

@@ -172,13 +172,18 @@ object KMeans {
     * candidate: the prune fails SAFE to the exact score, never drops rows.
     *
     * @return assignments (id, cluster, d2) and the final centroid table
-    *         (c, v) — both lazy, EXCEPT with `coarseCells > 1`, where
-    *         construction itself runs Spark jobs (the nested coarse fit
-    *         collects its cell seeds and the pair table is counted for a
-    *         measured broadcast decision, once per pruned pass): callers
-    *         building plans ahead of execution pay the full multi-pass
-    *         computation at call time on that path. Persisted
-    *         intermediates belong to `scope` on every path. */
+    *         (c, v). With `prune = false` both are lazy. With `prune = true`
+    *         construction itself runs Spark jobs: every assignment and
+    *         every centroid update is an eager [[CacheScope.checkpoint]]
+    *         (one job each — this cuts the lineage per pass, so the plan a
+    *         pass builds does not embed all earlier passes and both
+    *         outputs' plans stay the same size for any `passes`), and with
+    *         `coarseCells > 1` the nested coarse fit also collects its cell
+    *         seeds and the pair table is counted for a measured broadcast
+    *         decision, once per pruned pass. Callers building plans ahead
+    *         of execution pay the full multi-pass computation at call time
+    *         on the pruned path. Persisted and checkpointed intermediates
+    *         belong to `scope` on every path. */
   def fitCentroidTable(vecs: DataFrame, idCol: String = "vec_id",
       vecCol: String = "v", k: Int = 8, passes: Int = 2,
       scope: CacheScope = CacheScope.Unmanaged, prune: Boolean = false,
@@ -214,12 +219,27 @@ object KMeans {
     def assignExact(cs: DataFrame): DataFrame =
       argmin(v.crossJoin(maybeBroadcast(cs)))
 
+    // every centroid-derived side of a pruned pass holds ≤ k rows of at
+    // most an int and dim longs — decide its broadcast on that bound, not
+    // on Catalyst's estimate: a checkpointed centroid table carries its
+    // producing plan's product estimate (536 MB for 8 centroids on the
+    // sf0.01 corpus, past 10³⁵ bytes by pass 3), so maybeBroadcast would
+    // shuffle the N-sized side of every pruned join against a k-row table
+    lazy val centroidsFit = {
+      val dim = v.select(size(col("v"))).limit(1).collect()
+        .headOption.fold(0)(_.getInt(0))
+      k.toLong * (8L * math.max(dim, 1) + 16L) <=
+        graft.queries.Broadcasting.DefaultThresholdBytes
+    }
+    def centroidSide(df: DataFrame): DataFrame =
+      if (centroidsFit) broadcast(df) else df
+
     /** Triangle-pruned assignment: per-vector upper bound u² against the
       * previous cluster's UPDATED centroid (present by construction — a
       * cluster in `prev` had members, so the update emitted it), then score
       * only centroids with d(c_prev, c)² ≤ 4u². The k² pair table and the
-      * centroid sides size-guard-broadcast, so the N-sized side never
-      * shuffles for candidate generation. */
+      * centroid sides broadcast on their structural bounds, so the N-sized
+      * side never shuffles for candidate generation. */
     // sat(4·x): the ONE saturated-radius form. The soundness proof needs
     // the per-vector radius and the per-cluster rmax to saturate in exact
     // lockstep (radius ≤ rr2 relies on both using this same cutoff), so
@@ -229,7 +249,7 @@ object KMeans {
 
     def assignPruned(cs: DataFrame, prev: DataFrame): DataFrame = {
       val ubPlan = prev.select(col("id"), col("v"), col("cluster").as("ca"))
-        .join(maybeBroadcast(cs.select(col("c").as("ca"), col("cv").as("va"))), "ca")
+        .join(centroidSide(cs.select(col("c").as("ca"), col("cv").as("va"))), "ca")
         .select(col("id"), col("v"), col("ca"),
           call_function("vec_l2sq", col("v"), col("va")).as("ub2"))
       // the coarse path reads ub twice (rmax aggregation + the candidate
@@ -240,7 +260,7 @@ object KMeans {
         if (coarseCells > 1) twoLevelPairs(cs, ub)
         else {
           val full = cs.select(col("c").as("ca"), col("cv").as("va"))
-            .crossJoin(maybeBroadcast(cs.select(col("c").as("cb"), col("cv").as("vb"))))
+            .crossJoin(centroidSide(cs.select(col("c").as("cb"), col("cv").as("vb"))))
             .select(col("ca"), col("cb"),
               call_function("vec_l2sq", col("va"), col("vb")).as("dcc2"))
           // Catalyst sizes a crossJoin-derived frame as the PRODUCT of its
@@ -261,7 +281,7 @@ object KMeans {
         ub.join(dcc, "ca")
           .filter(col("dcc2") <= radius)
           .select(col("id"), col("v"), col("cb").as("c"))
-          .join(maybeBroadcast(cs.select(col("c"), col("cv"))), "c"))
+          .join(centroidSide(cs.select(col("c"), col("cv"))), "c"))
     }
 
     /** Two-level pair table: only pairs (ca, cb) with d² ≤ R²(ca), found by
@@ -269,10 +289,10 @@ object KMeans {
       * pair the per-vector filter (radius 4u² ≤ R²) could keep survives, so
       * the assignment is bit-identical to the full table.
       *
-      * NOTE the coarse path is EAGER at plan-construction time (the nested
-      * coarse fit collects its cell seeds, and the result is persisted for
-      * a measured broadcast decision) — unlike every other configuration of
-      * this API, which stays lazy until the caller's first action. */
+      * NOTE the coarse path adds eager work at plan-construction time on
+      * top of the pruned path's per-pass checkpoints: the nested coarse fit
+      * collects its cell seeds, and the result is persisted and counted for
+      * a measured broadcast decision. */
     def twoLevelPairs(cs: DataFrame, ub: DataFrame): DataFrame = {
       // per-cluster pair radius R² = sat(4·max u²): no member's own filter
       // can reach beyond it — MUST be the same saturation as the
@@ -285,21 +305,21 @@ object KMeans {
         cs.select(col("c").cast("long").as("cid"), col("cv")),
         "cid", "cv", k = coarseCells, passes = 1, scope = scope).assignments
         .select(col("id").cast("int").as("c"), col("cluster").as("cell"))
-      val withCell = cs.join(maybeBroadcast(cellAssign), "c")
+      val withCell = cs.join(centroidSide(cellAssign), "c")
       val centers = updateCentroids(
           withCell.select(col("cell").as("cluster"), col("cv").as("v")))
         .select(col("c").as("cell"), col("cv").as("centerv"))
-      val members = scope.track(withCell.join(maybeBroadcast(centers), "cell")
+      val members = scope.track(withCell.join(centroidSide(centers), "cell")
         .select(col("cell"), col("c"), col("cv"),
           call_function("vec_l2sq", col("cv"), col("centerv")).as("dcen2")))
       val cells = members.groupBy("cell").agg(max(col("dcen2")).as("rcell2"))
-        .join(maybeBroadcast(centers), "cell")
+        .join(centroidSide(centers), "cell")
       // probe: skip cell (center m, radius² r²) for ca only when
       // d²(ca, m) > 2·(R² + r²) ≥ (R + r)² ⇒ every member strictly beyond
       // R — integer-sound with factor-2 slack; any saturation keeps the cell
       val probed = cs.select(col("c").as("ca"), col("cv").as("va"))
-        .join(maybeBroadcast(rmax), "ca")
-        .crossJoin(maybeBroadcast(cells))
+        .join(centroidSide(rmax), "ca")
+        .crossJoin(centroidSide(cells))
         .filter(
           when(col("rr2") > lit(Long.MaxValue / 2) - col("rcell2"), lit(true))
             .otherwise(call_function("vec_l2sq", col("va"), col("centerv"))
@@ -330,16 +350,21 @@ object KMeans {
         case _ => assignExact(cs)
       }
       // pruned runs read each assignment TWICE (centroid update + next
-      // pass's candidate generation) — persist those, scope-owned; the
-      // exact path reads each once, so persisting would be pure overhead
-      val tracked = if (prune) scope.track(a) else a
-      prev = Some(tracked)
-      tracked
+      // pass's candidate generation) and embed it, with the centroids, in
+      // three joins of the next pass — a persisted frame keeps its whole
+      // plan, so the plan would multiply ~5× per pass. Checkpoint instead
+      // (eager, scope-owned): every pass starts from a leaf. The exact
+      // path reads each assignment once and its plan grows linearly, so it
+      // stays lazy
+      val out = if (prune) scope.checkpoint(a) else a
+      prev = Some(out)
+      out
     }
 
     for (_ <- 1 until passes) {
-      cents = scope.track(
-        updateCentroids(assign(cents)).select(col("c").cast("int").as("c"), col("cv")))
+      val updated =
+        updateCentroids(assign(cents)).select(col("c").cast("int").as("c"), col("cv"))
+      cents = if (prune) scope.checkpoint(updated) else scope.track(updated)
     }
     (assign(cents).drop("v"), cents.select(col("c"), col("cv").as("v")))
   }

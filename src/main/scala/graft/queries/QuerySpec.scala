@@ -24,9 +24,9 @@ import graft.operators.CacheScope
   * but a few EXECUTE work during construction — `pipeline_pretrain` /
   * `pipeline_pretrain_epochs` run the whole curation stage (LSH, connected
   * components, a localCheckpoint) eagerly, the k-means centroid-table
-  * builders run Lloyd fits (see KMeans.fitCentroidTable's coarseCells
-  * note), the purge/compaction entries (`pipeline_rag_purge*`,
-  * `pipeline_rag_codes_compact`, `pipeline_rag_purge_compact`,
+  * builders run Lloyd fits (the pruned KMeans.fitCentroidTable checkpoints
+  * every pass; see its `@return`), the purge/compaction entries
+  * (`pipeline_rag_purge*`, `pipeline_rag_codes_compact`, `pipeline_rag_purge_compact`,
   * `ret_bm25_purge`, `ret_bm25_compact`, `ret_bm25_purge_compact`, and
   * the mutated-lake serves `ret_bm25_served_mutated` /
   * `sim_ivf_served_purged` / `sim_ivfpq_served_mutated`, which run

@@ -340,16 +340,19 @@ class OperatorSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
-  test("KMeans.fitCentroidTable is bit-identical to the centroid-literal fit") {
-    import graft.operators.{CacheScope, KMeans}
+  // 40 rows in three irregular 3-dim blobs + a duplicate point, so ties and
+  // uneven clusters are exercised through every KMeans plan
+  private def plantedKMeansVecs = {
     import spark.implicits._
-    // irregular blobs + a duplicate point so ties and uneven clusters are
-    // exercised through both plans
-    val rows = (0L until 40L).map { i =>
+    (0L until 40L).map { i =>
       val c = (i % 3) * 2000000L - 2000000L
       (i, Seq(c + i % 5, c - i % 7, c + i % 3))
-    }
-    val vecs = rows.toDF("vec_id", "v")
+    }.toDF("vec_id", "v")
+  }
+
+  test("KMeans.fitCentroidTable is bit-identical to the centroid-literal fit") {
+    import graft.operators.{CacheScope, KMeans}
+    val vecs = plantedKMeansVecs
     val scope = new CacheScope
     val lit = KMeans.fit(vecs, "vec_id", "v", k = 3, passes = 2, scope = scope)
       .assignments.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -421,6 +424,30 @@ class OperatorSpec extends AnyFunSuite {
       passes = 3, scope = scope, prune = true, coarseCells = 3)
     val t = twoLvl.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(t == e, s"two-level diverged on corpus: ${(e -- t).take(5)} missing")
+    scope.release()
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("KMeans pruned fitCentroidTable plan size does not grow with passes") {
+    import graft.operators.{CacheScope, KMeans}
+    // a pruned pass embeds the previous assignment and centroids in three
+    // joins, so without a per-pass lineage cut the analyzed plan multiplies
+    // per pass (and AQE's plan rendering runs the JVM out of heap)
+    val vecs = plantedKMeansVecs
+    val scope = new CacheScope
+    def nodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case n => n }.size
+    for (cells <- Seq(0, 2)) {
+      def sizes(passes: Int): (Int, Int) = {
+        val (a, c) = KMeans.fitCentroidTable(vecs, "vec_id", "v", k = 3,
+          passes = passes, scope = scope, prune = true, coarseCells = cells)
+        (nodes(a), nodes(c))
+      }
+      val (a2, c2) = sizes(2)
+      val (a4, c4) = sizes(4)
+      assert(a4 == a2, s"coarseCells=$cells: assignments plan grew from $a2 nodes (2 passes) to $a4 (4 passes)")
+      assert(c4 == c2, s"coarseCells=$cells: centroid plan grew from $c2 nodes (2 passes) to $c4 (4 passes)")
+    }
     scope.release()
     spark.sharedState.cacheManager.clearCache()
   }
