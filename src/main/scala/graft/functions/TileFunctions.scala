@@ -1,146 +1,67 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{call_function, lit}
 
-/** Tile math as Catalyst Column expressions, built ONLY from Spark built-in
-  * functions — so every tile operator stays inside whole-stage codegen (no
-  * UDF/serde boundary), filters around it remain pushable, and the DuckDB
-  * oracle can evaluate the *same* formula.
+/** Tile math as Column functions: each is one call of the native Catalyst
+  * expression of the same SQL name ([[graft.plans.TileExpressions]]), whose
+  * generated code and interpreted eval both call the pure
+  * [[graft.tiles.TileMath]] — the one Scala-side definition of the tile
+  * law (file:line citations of the reference's tile.py live there).
   *
-  * Each Spark expression here has a `Sql.*` twin that renders the equivalent
-  * DuckDB SQL string; they are maintained side-by-side in this file so they
-  * cannot drift. Semantics follow the reference's tile.py (see
-  * [[graft.tiles.TileMath]] for the file:line citations).
+  * The functions resolve through the session function registry, so the
+  * session needs `GraftExtensions.register(spark)` (or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`) before a DataFrame
+  * using them is analyzed. Catalog tables load through `Tables`, which
+  * registers; library entry points outside the catalog register
+  * themselves.
   *
-  * Determinism note (oracle bit-parity): `2^zoom` is always injected as an
-  * exact integer literal (never `pow`), and all non-transcendental arithmetic
-  * is IEEE-exact (+,-,*,/), so Spark and DuckDB agree bit-for-bit except for
-  * last-ulp differences in tan/log/cos, which can only matter within ~1e-9 of
-  * a tile boundary — negligible for the lattice-valued synthetic coordinates
+  * Each forward function has a `Sql.*` twin that renders the equivalent
+  * DuckDB SQL: the oracle's independent formulation of the same law.
+  *
+  * Determinism note (oracle bit-parity): both sides inject `2^zoom` as an
+  * exact integer and all non-transcendental arithmetic is IEEE-exact
+  * (+,-,*,/), so the JVM and DuckDB agree bit-for-bit except for last-ulp
+  * differences in tan/log/cos, which can only matter within ~1e-9 of a
+  * tile boundary — negligible for the lattice-valued synthetic coordinates
   * used by the query corpus (see HeatmapQueries).
   */
 object TileFunctions {
 
-  /** 2^zoom as an exact double literal. */
-  private def pow2(zoom: Int): Double = (1L << zoom).toDouble
+  /** Mercator row at `zoom` (tile.py:16–17). */
+  def tileRow(lat: Column, zoom: Int): Column = call_function("tile_row", lat, lit(zoom))
 
-  /** shiftleft/shiftright with a *column* bit count (the functions.* helpers
-    * only accept literal Int counts). */
-  private def shiftL(v: Column, bits: Column): Column = call_function("shiftleft", v, bits)
-  private def shiftR(v: Column, bits: Column): Column = call_function("shiftright", v, bits)
-
-  /** Mercator row: floor((1 - ln(tan(rad)+1/cos(rad))/pi)/2 * 2^z)  (tile.py:16–17). */
-  def tileRow(lat: Column, zoom: Int): Column = {
-    val r = radians(lat)
-    floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / lit(math.Pi)) / lit(2.0) * lit(pow2(zoom)))
-  }
-
-  /** Column: floor((lon+180)/360 * 2^z)  (tile.py:20–21). */
-  def tileCol(lon: Column, zoom: Int): Column =
-    floor((lon + lit(180.0)) / lit(360.0) * lit(pow2(zoom)))
+  /** Tile column at `zoom` (tile.py:20–21). */
+  def tileCol(lon: Column, zoom: Int): Column = call_function("tile_col", lon, lit(zoom))
 
   /** `"z_row_col"` id from lat/lon (tile.py:8–13, 56–58). */
   def tileId(lat: Column, lon: Column, zoom: Int): Column =
-    concat_ws("_", lit(zoom), tileRow(lat, zoom), tileCol(lon, zoom))
+    call_function("tile_id", lat, lon, lit(zoom))
 
-  /** Variable-zoom variants: `zoom` is a column; 2^zoom via integer shiftleft
-    * (exact). Used by the single-pass pyramid (explode over zoom levels). */
-  def tileRow(lat: Column, zoom: Column): Column = {
-    val r = radians(lat)
-    floor((lit(1.0) - log(tan(r) + lit(1.0) / cos(r)) / lit(math.Pi)) / lit(2.0)
-      * shiftL(lit(1L), zoom.cast("int")).cast("double"))
-  }
-  def tileCol(lon: Column, zoom: Column): Column =
-    floor((lon + lit(180.0)) / lit(360.0) * shiftL(lit(1L), zoom.cast("int")).cast("double"))
-  def tileId(lat: Column, lon: Column, zoom: Column): Column =
-    concat_ws("_", zoom, tileRow(lat, zoom), tileCol(lon, zoom))
+  /** Quadtree parent id; null on a malformed id or zoom 0 (tile.py:60–64). */
+  def tileParent(id: Column): Column = call_function("tile_parent", id)
 
-  /** Decode pieces of a `"z_r_c"` id (tile.py:66–77). Malformed ids yield
-    * nulls (the reference returns None). */
-  def idZoom(id: Column): Column = element_at(split(id, "_"), 1).cast("int")
-  def idRow(id: Column): Column  = element_at(split(id, "_"), 2).cast("long")
-  def idColumn(id: Column): Column = element_at(split(id, "_"), 3).cast("long")
+  /** All strict ancestor ids, zoom-1 … 1 (tile.py:79–86); empty on a
+    * malformed id. The key generator of a single-pass pyramid. */
+  def tileAncestors(id: Column): Column = call_function("tile_ancestors", id)
 
-  /** Ancestor `levels` zooms coarser, by exact integer arithmetic
-    * (row >> levels); equivalent to the reference's center re-quantization
-    * (tile.py:60–64) for well-formed tiles. */
-  def tileAncestor(id: Column, levels: Int): Column =
-    concat_ws("_",
-      idZoom(id) - lit(levels),
-      shiftright(idRow(id), levels),
-      shiftright(idColumn(id), levels))
+  /** The 4 child ids one zoom finer (tile.py:88–98); empty on a malformed id. */
+  def tileChildren(id: Column): Column = call_function("tile_children", id)
 
-  def tileParent(id: Column): Column = tileAncestor(id, 1)
-
-  /** All strict ancestors zoom-1 … minZoom as an array (tile.py:79–86).
-    * This is the key generator for the single-pass pyramid: explode it and
-    * aggregate once instead of iterating 16 chained aggregations. */
-  def tileAncestors(id: Column, minZoom: Int = 1): Column = {
-    val z = idZoom(id)
-    // zoom <= minZoom has no strict ancestors: guard before sequence(), which
-    // throws on start < stop with a negative step (TileMath.ancestors and the
-    // reference's range(MAX, MIN, -1) both return an empty chain instead).
-    // NULL ids propagate NULL; ids whose pieces fail numeric parse yield [].
-    // NOTE: this composed form does NOT range-check numeric row/col the way
-    // decode does — an out-of-range id like "3_9_1" shifts anyway. Use the
-    // native tile_ancestors expression for decode-strict semantics.
-    when(z > lit(minZoom) && idRow(id).isNotNull && idColumn(id).isNotNull,
-      transform(
-        sequence(z - lit(1), lit(minZoom), lit(-1)),
-        a => concat_ws("_", a, shiftR(idRow(id), (z - a).cast("int")),
-                             shiftR(idColumn(id), (z - a).cast("int")))))
-      .otherwise(when(id.isNull, lit(null).cast("array<string>"))
-        .otherwise(array().cast("array<string>")))
-  }
-
-  /** 4 children one zoom finer (tile.py:88–98). */
-  def tileChildren(id: Column): Column = {
-    val z = idZoom(id) + lit(1)
-    val r = idRow(id) * lit(2)
-    val c = idColumn(id) * lit(2)
-    array(
-      concat_ws("_", z, r, c),
-      concat_ws("_", z, r, c + lit(1)),
-      concat_ws("_", z, r + lit(1), c),
-      concat_ws("_", z, r + lit(1), c + lit(1)))
-  }
-
-  /** Inverse Mercator north-edge latitude of a row (tile.py:24–26):
-    * degrees(atan(0.5*(e^n - e^-n))), n = pi - 2*pi*row/2^z. */
-  def latitudeFromRow(row: Column, zoom: Int): Column = {
-    val n = lit(math.Pi) - lit(2.0 * math.Pi) * row.cast("double") / lit(pow2(zoom))
-    degrees(atan(lit(0.5) * (exp(n) - exp(negate(n)))))
-  }
-  /** West-edge longitude of a column (tile.py:29–30). */
-  def longitudeFromColumn(col: Column, zoom: Int): Column =
-    col.cast("double") / lit(pow2(zoom)) * lit(360.0) - lit(180.0)
-
-  /** Full bounds/center struct for a tile id (tile.py:38–52) via the native
-    * [[graft.plans.TileExpressions.TileDecode]] expression. Requires
-    * `GraftExtensions.register(spark)` (or spark.sql.extensions) — resolved
-    * through the session function registry. */
+  /** struct(zoom, row, col, north, south, west, east, center_lat,
+    * center_lon) of an id (tile.py:38–52); null on a malformed id. */
   def tileDecode(id: Column): Column = call_function("tile_decode", id)
 
-  /** Morton (Z-order) layout key of (row, col) — built-in-composition form:
-    * fold the bit positions, placing each row bit at 2i+1 and column bit at
-    * 2i. Identical to [[graft.tiles.TileMath.morton]] and the native
-    * tile_morton expression (ExpressionSpec pins all three); prefer the
-    * native expression in hot paths (branchless magic-number dilation vs a
-    * 21-step interpreted fold). */
-  def tileMorton(row: Column, col: Column, bits: Int = 21): Column =
-    aggregate(sequence(lit(0), lit(bits - 1)),
-      lit(0L),
-      (acc, i) => acc
-        + shiftL(shiftR(row, i.cast("int")).bitwiseAND(1L), (i * 2 + 1).cast("int"))
-        + shiftL(shiftR(col, i.cast("int")).bitwiseAND(1L), (i * 2).cast("int")))
+  /** Morton (Z-order) layout key of (row, col): row bits at odd positions,
+    * column bits at even (see [[graft.tiles.TileMath.morton]]). */
+  def tileMorton(row: Column, col: Column): Column = call_function("tile_morton", row, col)
 
   // -------------------------------------------------------------------------
   // DuckDB-SQL twins. NOTE: DuckDB `log` is log10 — natural log is `ln`.
   // DuckDB floor() returns DOUBLE → cast to BIGINT before string concat.
   // -------------------------------------------------------------------------
   object Sql {
-    def pow2(zoom: Int): String = (1L << zoom).toString
+    private def pow2(zoom: Int): String = (1L << zoom).toString
 
     def tileRow(lat: String, zoom: Int): String =
       s"CAST(FLOOR((1.0 - LN(TAN(RADIANS($lat)) + 1.0/COS(RADIANS($lat)))/PI())/2.0 * ${pow2(zoom)}.0) AS BIGINT)"
@@ -150,14 +71,6 @@ object TileFunctions {
 
     def tileId(lat: String, lon: String, zoom: Int): String =
       s"CONCAT_WS('_', $zoom, ${tileRow(lat, zoom)}, ${tileCol(lon, zoom)})"
-
-    /** Variable-zoom (zoom is a SQL expression; 2^zoom via `<<`, exact). */
-    def tileRowZ(lat: String, zoom: String): String =
-      s"CAST(FLOOR((1.0 - LN(TAN(RADIANS($lat)) + 1.0/COS(RADIANS($lat)))/PI())/2.0 * CAST(1::BIGINT << $zoom AS DOUBLE)) AS BIGINT)"
-    def tileColZ(lon: String, zoom: String): String =
-      s"CAST(FLOOR(($lon + 180.0)/360.0 * CAST(1::BIGINT << $zoom AS DOUBLE)) AS BIGINT)"
-    def tileIdZ(lat: String, lon: String, zoom: String): String =
-      s"CONCAT_WS('_', $zoom, ${tileRowZ(lat, zoom)}, ${tileColZ(lon, zoom)})"
 
     def idZoom(id: String): String   = s"CAST(STRING_SPLIT($id, '_')[1] AS INT)"
     def idRow(id: String): String    = s"CAST(STRING_SPLIT($id, '_')[2] AS BIGINT)"

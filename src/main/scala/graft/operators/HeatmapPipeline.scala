@@ -51,16 +51,29 @@ object HeatmapPipeline {
   private def required(c: String, what: String = ""): Column =
     when(col(c).isNull, raise_error(lit(s"HeatmapPipeline: null $c$what"))).otherwise(col(c))
 
+  /** A required coordinate, or a job failure outside the domain where the
+    * reference's tile math is defined: heatmap.py's `math.log` and
+    * `int(math.floor(...))` raise ValueError on a NaN, on an infinite
+    * longitude and on a latitude outside (−90, 90], where the tile math
+    * would return a garbage row instead. */
+  private def coordinate(c: String, outside: Column => Column): Column =
+    when(isnan(col(c)) || outside(col(c)), raise_error(
+      concat(lit(s"HeatmapPipeline: $c out of domain: "), col(c).cast("string"))))
+      .otherwise(required(c))
+
   /** Stage 1 — op #3 (heatmap.py:25–36): drop background points (a null
     * source is kept, as in the reference's `source == "background"` test),
     * quantize to the fine zoom, emit one observation per point with count
     * 1.0. */
   def observations(locations: DataFrame, cfg: Config = Config()): DataFrame = {
+    graft.plans.GraftExtensions.register(locations.sparkSession)
     val base = locations
       .filter(!(col("source") <=> "background"))
       .select(
-        TileFunctions.tileRow(required("latitude"), cfg.fineZoom).as("fine_row"),
-        TileFunctions.tileCol(required("longitude"), cfg.fineZoom).as("fine_col"),
+        TileFunctions.tileRow(coordinate("latitude", lat => lat <= -90.0 || lat > 90.0),
+          cfg.fineZoom).as("fine_row"),
+        TileFunctions.tileCol(coordinate("longitude", lon => abs(lon) === Double.PositiveInfinity),
+          cfg.fineZoom).as("fine_col"),
         col("user_id").cast("string").as("user_id"),
         (if (cfg.timespans) {
           // a null timestamp would also emit TWO null-timespan rows per point

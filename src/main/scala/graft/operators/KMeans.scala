@@ -183,7 +183,10 @@ object KMeans {
     *         decision, once per pruned pass. Callers building plans ahead
     *         of execution pay the full multi-pass computation at call time
     *         on the pruned path. Persisted and checkpointed intermediates
-    *         belong to `scope` on every path. */
+    *         belong to `scope` on every path; on the pruned path a pass
+    *         frees the checkpoints it supersedes and its own persisted
+    *         pair-table inputs, so `scope` holds one pass's worth of
+    *         blocks for any `passes`. */
   def fitCentroidTable(vecs: DataFrame, idCol: String = "vec_id",
       vecCol: String = "v", k: Int = 8, passes: Int = 2,
       scope: CacheScope = CacheScope.Unmanaged, prune: Boolean = false,
@@ -247,17 +250,17 @@ object KMeans {
     def sat4(x2: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       when(x2 > lit(Long.MaxValue / 4), lit(Long.MaxValue)).otherwise(lit(4L) * x2)
 
-    def assignPruned(cs: DataFrame, prev: DataFrame): DataFrame = {
+    def assignPruned(cs: DataFrame, prev: DataFrame, pass: CacheScope): DataFrame = {
       val ubPlan = prev.select(col("id"), col("v"), col("cluster").as("ca"))
         .join(centroidSide(cs.select(col("c").as("ca"), col("cv").as("va"))), "ca")
         .select(col("id"), col("v"), col("ca"),
           call_function("vec_l2sq", col("v"), col("va")).as("ub2"))
       // the coarse path reads ub twice (rmax aggregation + the candidate
       // join) — persist it there, else the N distances recompute per read
-      val ub = if (coarseCells > 1) scope.track(ubPlan) else ubPlan
+      val ub = if (coarseCells > 1) pass.track(ubPlan) else ubPlan
 
       val dcc =
-        if (coarseCells > 1) twoLevelPairs(cs, ub)
+        if (coarseCells > 1) twoLevelPairs(cs, ub, pass)
         else {
           val full = cs.select(col("c").as("ca"), col("cv").as("va"))
             .crossJoin(centroidSide(cs.select(col("c").as("cb"), col("cv").as("vb"))))
@@ -291,9 +294,10 @@ object KMeans {
       *
       * NOTE the coarse path adds eager work at plan-construction time on
       * top of the pruned path's per-pass checkpoints: the nested coarse fit
-      * collects its cell seeds, and the result is persisted and counted for
-      * a measured broadcast decision. */
-    def twoLevelPairs(cs: DataFrame, ub: DataFrame): DataFrame = {
+      * collects its cell seeds, and the result is persisted (in the
+      * pass's own scope, released once the pass is checkpointed) and
+      * counted for a measured broadcast decision. */
+    def twoLevelPairs(cs: DataFrame, ub: DataFrame, pass: CacheScope): DataFrame = {
       // per-cluster pair radius R² = sat(4·max u²): no member's own filter
       // can reach beyond it — MUST be the same saturation as the
       // per-vector radius (see sat4)
@@ -303,13 +307,13 @@ object KMeans {
       // rows; cell QUALITY only affects pruning efficiency, never soundness)
       val cellAssign = fit(
         cs.select(col("c").cast("long").as("cid"), col("cv")),
-        "cid", "cv", k = coarseCells, passes = 1, scope = scope).assignments
+        "cid", "cv", k = coarseCells, passes = 1, scope = pass).assignments
         .select(col("id").cast("int").as("c"), col("cluster").as("cell"))
       val withCell = cs.join(centroidSide(cellAssign), "c")
       val centers = updateCentroids(
           withCell.select(col("cell").as("cluster"), col("cv").as("v")))
         .select(col("c").as("cell"), col("cv").as("centerv"))
-      val members = scope.track(withCell.join(centroidSide(centers), "cell")
+      val members = pass.track(withCell.join(centroidSide(centers), "cell")
         .select(col("cell"), col("c"), col("cv"),
           call_function("vec_l2sq", col("cv"), col("centerv")).as("dcen2")))
       val cells = members.groupBy("cell").agg(max(col("dcen2")).as("rcell2"))
@@ -325,7 +329,7 @@ object KMeans {
             .otherwise(call_function("vec_l2sq", col("va"), col("centerv"))
               <= lit(2L) * (col("rr2") + col("rcell2"))))
         .select(col("ca"), col("va"), col("rr2"), col("cell"))
-      val pairs = scope.track(probed
+      val pairs = pass.track(probed
         .join(members.select(col("cell"), col("c").as("cb"), col("cv").as("vb")), "cell")
         .select(col("ca"), col("cb"), col("rr2"),
           call_function("vec_l2sq", col("va"), col("vb")).as("dcc2"))
@@ -345,10 +349,6 @@ object KMeans {
 
     var prev: Option[DataFrame] = None
     def assign(cs: DataFrame): DataFrame = {
-      val a = prev match {
-        case Some(p) if prune => assignPruned(cs, p)
-        case _ => assignExact(cs)
-      }
       // pruned runs read each assignment TWICE (centroid update + next
       // pass's candidate generation) and embed it, with the centroids, in
       // three joins of the next pass — a persisted frame keeps its whole
@@ -356,7 +356,18 @@ object KMeans {
       // (eager, scope-owned): every pass starts from a leaf. The exact
       // path reads each assignment once and its plan grows linearly, so it
       // stays lazy
-      val out = if (prune) scope.checkpoint(a) else a
+      val out = prev match {
+        case Some(p) if prune =>
+          // the coarse path's persisted upper bounds, cells and pair table
+          // are dead once the checkpoint holds the assignment
+          val pass = new CacheScope
+          try scope.checkpoint(assignPruned(cs, p, pass)) finally pass.release()
+        case _ if prune => scope.checkpoint(assignExact(cs))
+        case _ => assignExact(cs)
+      }
+      // the superseded checkpoint's blocks go now, not at scope release:
+      // one pass's assignment is held at a time, not `passes` of them
+      prev.foreach(CacheScope.freeCheckpoint)
       prev = Some(out)
       out
     }
@@ -364,7 +375,9 @@ object KMeans {
     for (_ <- 1 until passes) {
       val updated =
         updateCentroids(assign(cents)).select(col("c").cast("int").as("c"), col("cv"))
-      cents = if (prune) scope.checkpoint(updated) else scope.track(updated)
+      val next = if (prune) scope.checkpoint(updated) else scope.track(updated)
+      CacheScope.freeCheckpoint(cents)
+      cents = next
     }
     (assign(cents).drop("v"), cents.select(col("c"), col("cv").as("v")))
   }

@@ -12,15 +12,16 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.tiles.TileMath
 
 /** Native Catalyst expressions for the tile math, with full `doGenCode`:
-  * the generated Java is inlined into whole-stage codegen exactly like a
-  * built-in (no virtual calls, no boxing, no UDF serde).
+  * the generated Java is inlined into whole-stage codegen and calls the
+  * static [[TileMath]] methods directly (no boxing, no UDF serde).
   *
   * These are the (b)-tier extension mechanism of SURVEY.md §2.x — a custom
-  * `Expression` beats a Scala UDF beats anything else — and they are
-  * semantically identical to both the built-in-function composition in
-  * [[graft.functions.TileFunctions]] and the pure [[TileMath]] (all three
-  * evaluate the same java.lang.Math operations; ExpressionSpec asserts
-  * bit-equality). Registered as SQL functions via [[GraftExtensions]].
+  * `Expression` beats a Scala UDF beats anything else. Generated code and
+  * interpreted eval both call [[TileMath]], so the two are equal by
+  * construction and [[TileMath]] stays the one Scala-side definition of
+  * the tile law; [[graft.functions.TileFunctions]] wraps these
+  * expressions as Column functions. Registered as SQL functions via
+  * [[GraftExtensions]].
   */
 object TileExpressions {
 
@@ -43,16 +44,6 @@ object TileExpressions {
     }
   }
 
-  private val mercatorJava: (String, String) => String = (lat, z) =>
-    s"""(long) java.lang.Math.floor(
-       |  (1.0 - java.lang.Math.log(
-       |     java.lang.Math.tan(java.lang.Math.toRadians($lat))
-       |     + 1.0 / java.lang.Math.cos(java.lang.Math.toRadians($lat))) / java.lang.Math.PI)
-       |  / 2.0 * (double) (1L << $z))""".stripMargin
-
-  private val columnJava: (String, String) => String = (lon, z) =>
-    s"(long) java.lang.Math.floor(($lon + 180.0) / 360.0 * (double) (1L << $z))"
-
   /** tile_row(latitude, zoom) → Mercator row (tile.py:16–17). */
   case class TileRow(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -65,7 +56,8 @@ object TileExpressions {
       TileMath.rowFromLatitude(lat.asInstanceOf[Double], zoom.asInstanceOf[Int])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lat, z) => s"${ev.value} = ${mercatorJava(lat, z)};")
+      nullSafeCodeGen(ctx, ev, (lat, z) =>
+        s"${ev.value} = graft.tiles.TileMath.rowFromLatitude($lat, $z);")
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): TileRow =
       copy(left = l, right = r)
@@ -83,7 +75,8 @@ object TileExpressions {
       TileMath.columnFromLongitude(lon.asInstanceOf[Double], zoom.asInstanceOf[Int])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lon, z) => s"${ev.value} = ${columnJava(lon, z)};")
+      nullSafeCodeGen(ctx, ev, (lon, z) =>
+        s"${ev.value} = graft.tiles.TileMath.columnFromLongitude($lon, $z);")
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): TileCol =
       copy(left = l, right = r)
@@ -230,18 +223,9 @@ object TileExpressions {
         lat.asInstanceOf[Double], lon.asInstanceOf[Double], zoom.asInstanceOf[Int]))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lat, lon, z) => {
-        // freshName is load-bearing: with non-nullable children the result
-        // code inlines WITHOUT braces, so two tile_id calls in one
-        // projection (exactly what the TileAlgebra parent rewrite produces)
-        // would redeclare a fixed local and fail janino compilation
-        val r = ctx.freshName("tileRow")
-        val c = ctx.freshName("tileCol")
-        s"""long $r = ${mercatorJava(lat, z)};
-           |long $c = ${columnJava(lon, z)};
-           |${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-           |  $z + "_" + $r + "_" + $c);""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (lat, lon, z) =>
+        s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
+           |  graft.tiles.TileMath.tileIdFromLatLon($lat, $lon, $z));""".stripMargin)
 
     override protected def withNewChildrenInternal(
         f: Expression, s: Expression, t: Expression): TileId =

@@ -37,9 +37,10 @@ import graft.operators.HeatmapPipeline.{blobEntryJson, blobJson}
   * verified defect and is NOT replicated.
   *
   * The corpus has no lat/lon (FIXTURES.md §B): synthetic coordinates derive
-  * from `event_id` with integer-lattice arithmetic so Spark and DuckDB agree
+  * from `event_id` with integer-lattice arithmetic so the native tile
+  * expressions (TileMath on the JVM) and DuckDB's SQL twins agree
   * bit-for-bit (only +,-,*,/ on exactly-representable values feed the
-  * trig; see TileFunctions determinism note).
+  * trig; see the TileFunctions determinism note).
   */
 object HeatmapQueries {
 
@@ -322,12 +323,13 @@ object HeatmapQueries {
         .select(TileFunctions.tileId(latCol, lonCol, 12).as("tile_id"))
         .distinct()
         .select(col("tile_id"),
-          TileFunctions.idZoom(col("tile_id")).as("zoom"),
-          TileFunctions.idRow(col("tile_id")).as("r"),
-          TileFunctions.idColumn(col("tile_id")).as("c"),
+          TileFunctions.tileDecode(col("tile_id")).as("t"),
+          TileFunctions.tileAncestors(col("tile_id")).as("anc"))
+        .select(col("tile_id"),
+          col("t.zoom").as("zoom"), col("t.row").as("r"), col("t.col").as("c"),
           TileFunctions.tileParent(col("tile_id")).as("parent_id"),
-          TileFunctions.tileAncestor(col("tile_id"), 5).as("rs_tile_id"),
-          array_join(TileFunctions.tileAncestors(col("tile_id")), ",").as("ancestors"),
+          element_at(col("anc"), 5).as("rs_tile_id"), // zooms 11 … 1: the 5th is 12 - 5
+          array_join(col("anc"), ",").as("ancestors"),
           element_at(TileFunctions.tileChildren(col("tile_id")), 1).as("child0"))
         .orderBy("tile_id"))
 
@@ -391,9 +393,10 @@ object HeatmapQueries {
         .otherwise(concat(lit("u"), col("user_id"))).as("user_id"),
       col("ts").as("timestamp"))
 
-  /** Same semantics and oracle as hm_tiles, but computed via the NATIVE
+  /** Same semantics and oracle as hm_tiles, but reaching the native
     * codegen Catalyst expressions (plans.TileExpressions) through the SQL
-    * surface — proving the custom Expression path is oracle-exact. */
+    * surface instead of the Column wrappers — proving the SQL registration
+    * path is oracle-exact. */
   val hmTilesNative = QuerySpec(
     "hm_tiles_native",
     "tile quantization via native codegen Catalyst expressions (SQL surface)",
@@ -401,7 +404,6 @@ object HeatmapQueries {
             |  CAST(1.0 AS DOUBLE) AS cnt
             |FROM events WHERE $sourceFilterSql ORDER BY event_id""".stripMargin),
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       Tables(s, dir, "events").createOrReplaceTempView("events")
       s.sql(s"""SELECT event_id, user_id,
                |  tile_id($latSql, $lonSql, 12) AS tile_id,
@@ -491,7 +493,6 @@ object HeatmapQueries {
          |FROM b ORDER BY tile_id""".stripMargin
     },
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       events(s, dir)
         .filter(sourceFilter)
         .select(TileFunctions.tileId(latCol, lonCol, 12).as("tile_id"))
@@ -556,7 +557,6 @@ object HeatmapQueries {
             |  CAST(${T.idZoom("tile_id")} - 1 AS BIGINT) AS n_ancestors
             |FROM q ORDER BY tile_id""".stripMargin),
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       events(s, dir).createOrReplaceTempView("graft_events_v")
       // parent/ancestors apply to the NESTED tile_id expression (projection
       // feeds the distinct), so TileAlgebra sees its structural pattern;
@@ -589,7 +589,6 @@ object HeatmapQueries {
             |  CAST(COUNT(*) OVER (PARTITION BY (morton >> 6)) AS BIGINT) AS tiles_in_block
             |FROM m ORDER BY morton""".stripMargin),
     (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("zblock")
       events(s, dir)
         .filter(sourceFilter)
@@ -617,7 +616,6 @@ object HeatmapQueries {
     Some(viewportOracleSql),
     (s, dir) => {
       import graft.tiles.ZRange
-      graft.plans.GraftExtensions.register(s)
       val (rMin, rMax) = viewportRows
       val (cMin, cMax) = viewportCols
       // the store-serving predicate shape: ≤ 8 COARSE key ranges (superset

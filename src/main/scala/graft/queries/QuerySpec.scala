@@ -119,15 +119,21 @@ object Tables {
     *     disable the inference so the stored micros read as TIMESTAMP
     *     unchanged (every harness pins session tz = UTC). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every catalog query loads tables through here, so this is the one
-    // chokepoint that guarantees the native expressions (tile_*, vec_*) and
-    // the TileAlgebra rule are installed before any builder references them
-    graft.plans.GraftExtensions.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    prepare(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
+  }
+
+  /** The session state every corpus read needs: the `ts` normalization
+    * confs above, and the native expressions (tile_*, vec_*) plus the
+    * TileAlgebra rule. Every catalog query loads its tables through here
+    * (the streaming entries' file-source reads call it directly), so a
+    * builder may reference the native functions after its first load. */
+  private[queries] def prepare(spark: SparkSession): Unit = {
+    graft.plans.GraftExtensions.register(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
   }
 }

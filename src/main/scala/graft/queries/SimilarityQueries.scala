@@ -989,7 +989,6 @@ object SimilarityQueries {
             |  d2 <= 100000000000 AS is_near_dup
             |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
     (s, dir, scope) => {
-      graft.plans.GraftExtensions.register(s)
       val v = emb(s, dir).select(col("vec_id"),
         transform(col("embedding"),
           x => floor(x.cast("double") * lit(1000000)).cast("long")).as("v"))
@@ -1352,7 +1351,6 @@ object SimilarityQueries {
          |FROM r WHERE rn <= 5 ORDER BY q_id, rn""".stripMargin
     },
     (s, dir, scope) => {
-      graft.plans.GraftExtensions.register(s)
       val vx = pqVx(s, dir)
       val models = pqFitFor(s, dir, "raw", vx, scope)
       val codes = vx.select(

@@ -18,15 +18,15 @@ import graft.streaming.StreamingOps
 object StreamingQueries {
 
   /** The events corpus as an UNBOUNDED DataFrame: schema discovered from the
-    * parquet file under the SAME normalization confs as `Tables` (nanos →
-    * long + truncate; naive micros → TIMESTAMP via inferTimestampNTZ=false
-    * — event-time watermarks reject TIMESTAMP_NTZ), fed through the file
+    * parquet file after `Tables.prepare` (the same normalization confs as a
+    * batch read — nanos → long + truncate; naive micros → TIMESTAMP via
+    * inferTimestampNTZ=false, as event-time watermarks reject
+    * TIMESTAMP_NTZ — and the native functions registered), fed through the file
     * stream source. The corpus table is a single parquet FILE and the file
     * source accepts files only via glob patterns (a literal path must be a
     * directory), so one character is quoted to force glob handling. */
   private def streamEvents(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    Tables.prepare(s)
     val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
     val raw = s.readStream.schema(rawSchema)
       .parquet(s"$dir/events.parque[t]")

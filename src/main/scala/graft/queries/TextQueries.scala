@@ -3045,7 +3045,6 @@ object TextQueries {
       val lex = bm25Ranked(s, dir, scope)
         .filter(col("rn") <= RrfTopk)
         .select(col("query_id"), col("doc_id"), col("rn").as("lex_rn"))
-      graft.plans.GraftExtensions.register(s)
       // integer-exact dense ranking — the micros projection is map-side
       // over the scan; no double ever feeds the ROW_NUMBER (see the
       // ranking-law scaladoc above)
@@ -3136,7 +3135,6 @@ object TextQueries {
          |${rrfFuseSql("lex", "vec")}""".stripMargin
     },
     (s, dir, scope) => {
-      graft.plans.GraftExtensions.register(s)
       val lex = lexRanked(s,
           lexStagedPostings(s, dir).filter(col("tb").isin(LexQueryBuckets: _*)),
           lexStagedStats(s, dir).agg(sum("n").as("n"), sum("t").as("t")))

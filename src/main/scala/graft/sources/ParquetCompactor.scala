@@ -55,6 +55,7 @@ object ParquetCompactor {
       latCol: String, lonCol: String, zoom: Int = 12,
       targetFileMB: Int = 256): Long = {
     val nFiles = targetFileCount(spark, inDir, targetFileMB)
+    graft.plans.GraftExtensions.register(spark)
     spark.read.parquet(inDir)
       .withColumn("zkey", TileFunctions.tileMorton(
         TileFunctions.tileRow(col(latCol), zoom),

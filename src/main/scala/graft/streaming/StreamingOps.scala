@@ -47,7 +47,8 @@ object StreamingOps {
   def streamingHeatmap(events: DataFrame, zoom: Int, lat: Column, lon: Column,
       perUser: Column, window_ : String = "1 hour",
       watermark: String = "1 hour",
-      dropFilter: Column = col("event_type") =!= "view"): DataFrame =
+      dropFilter: Column = col("event_type") =!= "view"): DataFrame = {
+    graft.plans.GraftExtensions.register(events.sparkSession)
     events
       .filter(dropFilter)
       .select(col("ts"), lat.as("lat"), lon.as("lon"), perUser.as("per_user"))
@@ -59,6 +60,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("window_start"), col("user_group"),
         col("tile_id"), col("cnt"))
+  }
 
   /** Streaming deduplication: drop replayed events by id, with state
     * bounded by the watermark (an id older than the watermark can no longer

@@ -6,9 +6,10 @@ import graft.functions.TileFunctions
 import graft.plans.GraftExtensions
 import graft.tiles.TileMath
 
-/** The three tile-math paths — pure Scala, built-in-function composition,
-  * and the native codegen Expression — must agree bit-for-bit, in both
-  * codegen and interpreted evaluation. */
+/** The native codegen tile Expressions (and the TileFunctions Column
+  * wrappers over them) must agree bit-for-bit with the pure-Scala TileMath,
+  * in both codegen and interpreted evaluation. The built-in-function
+  * compositions they replaced stay here, inline, as independent oracles. */
 class ExpressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -38,9 +39,13 @@ class ExpressionSpec extends AnyFunSuite {
   test("fixed-zoom Column composition matches the native expression") {
     GraftExtensions.register(spark)
     val df = sampleDf.filter(col("zoom") === 12)
-    val both = df.select(
-      TileFunctions.tileId(col("lat"), col("lon"), 12).as("composed"),
-      expr("tile_id(lat, lon, 12)").as("native"))
+    // the Mercator law from Spark built-ins (tile.py:16–21), 2^12 exact
+    val rad = radians(col("lat"))
+    val composed = concat_ws("_", lit(12),
+      floor((lit(1.0) - log(tan(rad) + lit(1.0) / cos(rad)) / lit(math.Pi)) / lit(2.0) * lit(4096.0)),
+      floor((col("lon") + lit(180.0)) / lit(360.0) * lit(4096.0)))
+    val both = df.select(composed.as("composed"),
+      TileFunctions.tileId(col("lat"), col("lon"), 12).as("native"))
     assert(both.filter(col("composed") =!= col("native")).isEmpty)
   }
 
@@ -61,23 +66,26 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("inverse Column functions match pure TileMath (bounds round-trip)") {
-    import graft.functions.TileFunctions
+    GraftExtensions.register(spark)
     val rows = sampleDf.filter(col("zoom") === 9)
-      .select(TileFunctions.tileRow(col("lat"), 9).as("r"),
-        TileFunctions.tileCol(col("lon"), 9).as("c"))
-      .select(col("r"), col("c"),
-        TileFunctions.latitudeFromRow(col("r"), 9).as("north"),
-        TileFunctions.longitudeFromColumn(col("c"), 9).as("west"))
+      .select(col("lat"), col("lon"),
+        TileFunctions.tileRow(col("lat"), 9).as("r"),
+        TileFunctions.tileCol(col("lon"), 9).as("c"),
+        TileFunctions.tileDecode(TileFunctions.tileId(col("lat"), col("lon"), 9)).as("t"))
       .collect()
     assert(rows.nonEmpty)
-    // Spark's built-in exp/atan codegen through StrictMath while JVM Math
-    // uses intrinsics — a 1–2 ulp difference is inherent (and is why
-    // transcendental OUTPUTS are kept out of oracle-compared queries;
-    // quantized tile indices absorb it). Assert ulp-level agreement.
-    def close(a: Double, b: Double) = (a - b).abs <= 1e-12 * math.max(a.abs, b.abs)
     rows.foreach { row =>
-      assert(close(row.getDouble(2), graft.tiles.TileMath.latitudeFromRow(row.getLong(0), 9)))
-      assert(row.getDouble(3) == graft.tiles.TileMath.longitudeFromColumn(row.getLong(1), 9))
+      val (lat, lon, r, c) = (row.getDouble(0), row.getDouble(1), row.getLong(2), row.getLong(3))
+      val t = row.getStruct(4)
+      assert(t.getInt(0) == 9 && t.getLong(1) == r && t.getLong(2) == c)
+      assert(t.getDouble(3) == TileMath.latitudeFromRow(r, 9), s"north @($lat,$lon)")
+      assert(t.getDouble(4) == TileMath.latitudeFromRow(r + 1, 9), s"south @($lat,$lon)")
+      assert(t.getDouble(5) == TileMath.longitudeFromColumn(c, 9), s"west @($lat,$lon)")
+      assert(t.getDouble(6) == TileMath.longitudeFromColumn(c + 1, 9), s"east @($lat,$lon)")
+      // round trip: the point lies inside its tile's bounds (to an ulp of
+      // the inverse trig)
+      assert(lat <= t.getDouble(3) + 1e-9 && lat >= t.getDouble(4) - 1e-9, s"lat $lat")
+      assert(lon >= t.getDouble(5) && lon < t.getDouble(6), s"lon $lon")
     }
   }
 
@@ -183,18 +191,28 @@ class ExpressionSpec extends AnyFunSuite {
     assert(r.getSeq[String](1) == TileMath.childIds("12_2456_655"))
     assert(r.getSeq[String](2).isEmpty && r.getSeq[String](3).isEmpty &&
       r.getSeq[String](4).isEmpty)
-    // agreement with the built-in-function composition over real tile ids
+    // agreement with the built-in-function composition over real tile ids:
+    // split the id, shift row and column by exact integer shifts
     sampleDf.createOrReplaceTempView("pts")
+    def part(i: Int) = element_at(split(col("id"), "_"), i)
+    val z = part(1).cast("int")
+    def shr(v: org.apache.spark.sql.Column, bits: org.apache.spark.sql.Column) =
+      call_function("shiftright", v, bits)
+    val composed = when(z > lit(1),
+      transform(sequence(z - lit(1), lit(1), lit(-1)), a =>
+        concat_ws("_", a, shr(part(2).cast("long"), z - a), shr(part(3).cast("long"), z - a))))
+      .otherwise(array().cast("array<string>"))
     val mismatches = spark.sql(
       "SELECT tile_id(lat, lon, zoom) AS id FROM pts")
       .select(col("id"),
-        expr("tile_ancestors(id)").as("native"),
-        TileFunctions.tileAncestors(col("id")).as("composed"))
+        TileFunctions.tileAncestors(col("id")).as("native"),
+        composed.as("composed"))
       .filter(col("native") =!= col("composed"))
     assert(mismatches.isEmpty)
   }
 
   test("tileAncestors yields an empty chain at zoom <= minZoom (no sequence() error)") {
+    GraftExtensions.register(spark)
     import spark.implicits._
     val rows = Seq("1_0_0", "0_0_0", "3_5_2").toDF("id")
       .select(col("id"), TileFunctions.tileAncestors(col("id")).as("anc"))
@@ -237,9 +255,15 @@ class ExpressionSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val pts = Seq.fill(2000)((rnd.nextInt(1 << 21).toLong, rnd.nextInt(1 << 21).toLong))
     val df = pts.toDF("r", "c")
+    // built-in fold: place row bit i at 2i+1 and column bit i at 2i
+    def bit(v: String, i: org.apache.spark.sql.Column, at: org.apache.spark.sql.Column) =
+      call_function("shiftleft",
+        call_function("shiftright", col(v), i).bitwiseAND(1L), at)
+    val fold = aggregate(sequence(lit(0), lit(20)), lit(0L),
+      (acc, i) => acc + bit("r", i, i * 2 + 1) + bit("c", i, i * 2))
     val three = df.select(
-      expr("tile_morton(r, c)").as("native"),
-      TileFunctions.tileMorton(col("r"), col("c")).as("composed"))
+      TileFunctions.tileMorton(col("r"), col("c")).as("native"),
+      fold.as("composed"))
       .collect().zip(pts)
     three.foreach { case (row, (r, c)) =>
       val expected = TileMath.morton(r, c)
@@ -464,7 +488,8 @@ class ExpressionSpec extends AnyFunSuite {
         // the two DIFFERENT-zoom tile_id calls are load-bearing: identical
         // calls are deduplicated by subexpression elimination, so only a
         // non-dedupable pair exercises two TileId codegen instances in ONE
-        // scope (the fixed-local collision that freshName now prevents)
+        // scope (generated code that declared a fixed local once failed
+        // to compile exactly here)
         """SELECT tile_row(lat, zoom) AS r, tile_col(lon, zoom) AS c,
           |  tile_id(lat, lon, zoom) AS id, tile_id(lat, lon, 11) AS id11,
           |  tile_parent(tile_id(lat, lon, zoom)) AS parent,

@@ -135,6 +135,28 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an out-of-domain latitude or longitude fails the job instead of writing a garbage tile") {
+    // heatmap.py's math.log / int(math.floor(...)) raise on each of these;
+    // the tile math would give a null row (→ a 2-segment tile id), an
+    // overflowed one, or a silent row 0
+    import spark.implicits._
+    for ((lat, lon, name) <- Seq((95.0, -122.3321, "latitude"), (-90.0, -122.3321, "latitude"),
+        (Double.NaN, -122.3321, "latitude"), (47.6062, Double.NaN, "longitude"),
+        (47.6062, Double.PositiveInfinity, "longitude"))) {
+      val bad = Seq((lat, lon, "gps", "alice", 1700000000000L))
+        .toDF("latitude", "longitude", "source", "user_id", "timestamp")
+        .withColumn("timestamp", timestamp_millis(col("timestamp")))
+      failsWith(s"$name out of domain") {
+        HeatmapPipeline.run(locations.unionByName(bad)).collect()
+      }
+    }
+    // the domain's closed end is in it, as in the reference: lat 90 quantizes
+    val pole = Seq((90.0, 0.0, "gps", "alice", 1700000000000L))
+      .toDF("latitude", "longitude", "source", "user_id", "timestamp")
+      .withColumn("timestamp", timestamp_millis(col("timestamp")))
+    assert(HeatmapPipeline.observations(pole).count() == 2)
+  }
+
   test("rollup of a keyless fine table equals pyramid's 'all' group") {
     // stream_hm_pyramid's shape at unit scale: a fine-tile count table with
     // no group columns rolled up on its own

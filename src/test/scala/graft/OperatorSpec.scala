@@ -433,22 +433,29 @@ class OperatorSpec extends AnyFunSuite {
     // a pruned pass embeds the previous assignment and centroids in three
     // joins, so without a per-pass lineage cut the analyzed plan multiplies
     // per pass (and AQE's plan rendering runs the JVM out of heap)
+    // ... and the cached blocks it holds must not grow either: a superseded
+    // pass's checkpoints and persisted pair-table inputs are freed as the
+    // fit goes, not at scope release
     val vecs = plantedKMeansVecs
-    val scope = new CacheScope
     def nodes(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect { case n => n }.size
     for (cells <- Seq(0, 2)) {
-      def sizes(passes: Int): (Int, Int) = {
+      def sizes(passes: Int): (Int, Int, Int) = {
+        val scope = new CacheScope
+        val before = spark.sparkContext.getPersistentRDDs.size
         val (a, c) = KMeans.fitCentroidTable(vecs, "vec_id", "v", k = 3,
           passes = passes, scope = scope, prune = true, coarseCells = cells)
-        (nodes(a), nodes(c))
+        val held = spark.sparkContext.getPersistentRDDs.size - before
+        val out = (nodes(a), nodes(c), held)
+        scope.release()
+        out
       }
-      val (a2, c2) = sizes(2)
-      val (a4, c4) = sizes(4)
+      val (a2, c2, h2) = sizes(2)
+      val (a4, c4, h4) = sizes(4)
       assert(a4 == a2, s"coarseCells=$cells: assignments plan grew from $a2 nodes (2 passes) to $a4 (4 passes)")
       assert(c4 == c2, s"coarseCells=$cells: centroid plan grew from $c2 nodes (2 passes) to $c4 (4 passes)")
+      assert(h4 == h2, s"coarseCells=$cells: persistent RDDs before release grew from $h2 (2 passes) to $h4 (4 passes)")
     }
-    scope.release()
     spark.sharedState.cacheManager.clearCache()
   }
 

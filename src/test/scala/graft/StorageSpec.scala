@@ -106,6 +106,12 @@ class StorageSpec extends AnyFunSuite {
     val compacted = spark.read.parquet(out)
     // no rows lost, zkey stored for row-group statistics
     assert(compacted.count() == 1000000 && compacted.columns.contains("zkey"))
+    // every stored key is the pure-Scala Morton key of the zoom-12 tile
+    val zkeyOf = org.apache.spark.sql.functions.udf((lat: Double, lon: Double) =>
+      graft.tiles.TileMath.morton(graft.tiles.TileMath.rowFromLatitude(lat, 12),
+        graft.tiles.TileMath.columnFromLongitude(lon, 12)))
+    assert(compacted.filter(col("zkey") =!= zkeyOf(col("latitude"), col("longitude")))
+      .isEmpty, "stored zkey must equal TileMath.morton(row, col) at zoom 12")
     // range partitioning: per-FILE zkey ranges must be (essentially)
     // disjoint — each file covers one compact region of the Z-curve, which
     // is what makes min/max pruning effective for bbox scans
