@@ -1,8 +1,19 @@
 package graft
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import Harness.jsonStr
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+  *
+  * A sample is one [[Harness.runEntry]] with a `noop` sink: the entry's
+  * build (eager staged work included) plus a write that executes its whole
+  * plan. A listener counts the Spark jobs, stages and tasks each sample
+  * schedules; BENCH_DETAIL.json's `layers` holds their medians. With
+  * `SPARK_GRAFT_ONLY=<regex>` only the matching queries run, and each
+  * sample also prints one `[profile]` line on stderr: build, exec and
+  * total seconds, the counts, and the built frame's Catalyst phase times.
   *
   * The catalog runs as one DISCARDED WARMUP PASS plus THREE full
   * INTERLEAVED PASSES (pass 1 runs every query once in order, then pass
@@ -54,6 +65,12 @@ import Harness.jsonStr
 object Bench {
   private val Passes = 3
 
+  /** What each sample times: the entry's build, then a `noop` write of its
+    * frame, which executes the whole plan. Carried by both artifacts;
+    * snapshots without the field timed `count()`, which let the optimizer
+    * prune what the count did not need. */
+  private val Timing = "noop"
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -65,75 +82,163 @@ object Bench {
   private def fmt3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** A median count: whole unless two samples straddle it. */
+  private def fmtCount(v: Double): String =
+    if (v.isWhole) v.toLong.toString else fmt3(v)
+
+  /** One sample of one query: build and exec seconds, and the Spark jobs,
+    * stages and tasks the build and the sink scheduled. */
+  private final case class Sample(buildS: Double, execS: Double,
+      jobs: Int, stages: Int, tasks: Int) {
+    def total: Double = buildS + execS
+  }
+
+  /** Counts the jobs, stages and tasks scheduled since the last reset. */
+  private final class Counts extends SparkListener {
+    val jobs, stages, tasks = new AtomicInteger
+    def reset(): Unit = Seq(jobs, stages, tasks).foreach(_.set(0))
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(sc.stageInfo.numTasks)
+    }
+  }
+
+  /** The newest committed snapshot (`bench/BENCH_DETAIL_r{N}.json`) usable
+    * as a drift baseline, with its healthy per-query medians. Skipped, with
+    * one stderr diagnostic when none is left:
+    *   - a snapshot whose own PASS SPREAD flagged it (internally noisy
+    *     medians; legacy artifacts without `spread_contended` fall back to
+    *     the combined flag). One flagged ONLY by drift stays eligible, or
+    *     the flag would latch forever after any genuine slowdown;
+    *   - a different scale factor;
+    *   - a different `timing` (absent = `count`): medians of a pruned
+    *     `count()` plan are no baseline for `noop` ones;
+    *   - an unparseable file. The parse is Jackson's with STRICT duplicate
+    *     detection, so a duplicate-key artifact fails loudly too. */
+  private def pickBaseline(sfDir: String): Option[(String, Map[String, Double])] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get("bench")
+    if (!Files.isDirectory(dir)) return None
+    val names = {
+      val st = Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally st.close()
+    }
+    val rx = "^BENCH_DETAIL_r(\\d+)\\.json$".r
+    val candidates = names
+      .flatMap(n => rx.findFirstMatchIn(n).map(m => (m.group(1).toInt, n)))
+      .sortBy(-_._1)
+    val picked = candidates.iterator.flatMap { case (_, n) =>
+      try {
+        val root = new com.fasterxml.jackson.databind.ObjectMapper()
+          .enable(com.fasterxml.jackson.core.JsonParser.Feature
+            .STRICT_DUPLICATE_DETECTION)
+          .readTree(new String(Files.readAllBytes(dir.resolve(n)), "UTF-8"))
+        val selfNoisy =
+          if (root.has("spread_contended"))
+            root.path("spread_contended").asBoolean(false)
+          else root.path("contended").asBoolean(false)
+        val qs = root.path("queries")
+        if (selfNoisy || root.path("sf").asText("") != sfDir ||
+            root.path("timing").asText("count") != Timing || !qs.isObject) None
+        else {
+          val pairs = qs.properties().asScala
+            .filter(_.getValue.isNumber)
+            .map(e => e.getKey -> e.getValue.asDouble())
+            .filter(_._2 >= 0).toMap
+          if (pairs.isEmpty) None else Some(n -> pairs)
+        }
+      } catch {
+        case e: Exception =>
+          System.err.println(s"[bench-baseline] skipping unreadable snapshot $n: $e")
+          None
+      }
+    }.nextOption()
+    if (picked.isEmpty && candidates.nonEmpty)
+      System.err.println("[bench-baseline] " +
+        s"${candidates.size} committed snapshot(s) under bench/ but none " +
+        "usable as a drift baseline (self-flagged noisy, different sf or " +
+        "timing, or unparseable) — drift check skipped this run")
+    picked
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
-    // audit trail for the size-guarded broadcast hints: one stderr line per
-    // distinct guard decision (site, estimate, fired-or-not) — what a
-    // cluster profile reads before retuning the 64 MB threshold
-    graft.queries.Broadcasting.logDecisions = true
-    // k-means memoization OFF under Bench: the three same-answer plans
-    // (emb_kmeans / emb_kmeans_table / emb_kmeans_twolevel) must all time
-    // fit+assignment — the table twins' fit cost lives in plan lineage the
-    // cache-clearing below always recomputes, so the literal model's
-    // driver-side memo was the ONLY one that could survive, and its entry
-    // read 20-40x faster for measuring a different thing. See
-    // SimilarityQueries.memoizeModel.
-    graft.queries.SimilarityQueries.memoizeModel = false
+    val counts = new Counts
+    spark.sparkContext.addSparkListener(counts)
     Harness.warmup(spark, sfDir)
-    // SPARK_GRAFT_ONLY=<regex>: time a subset while iterating (the full
+    // SPARK_GRAFT_ONLY=<regex>: time a subset while iterating, with one
+    // [profile] line per query and pass on stderr (the full
     // BENCH_DETAIL.json artifact is only written for unfiltered runs, so a
     // partial run can never clobber the recorded full-catalog numbers)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val filtered = sys.env.contains("SPARK_GRAFT_ONLY")
     // last failure message per query; a query lands in the reported `errors`
     // only if NO pass produced a sample (docstring contract) — a one-pass
     // transient (the contention noise this harness is shaped around) keeps
     // its healthy median and is surfaced as `flaky` in the detail artifact
     var failMsgs = Map.empty[String, String]
-    val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(name.matches) }
-    // passTimes(p)(name) = the time pass p measured for that query (a
-    // failed pass records no sample); passBounds = wall-clock [start, end]
-    // of each pass, so a contended pass is identifiable in the artifact.
-    // Pass 0 is the discarded per-query codegen/JIT warmup: its samples
-    // are recorded separately and excluded from medians, errors, and
-    // flaky accounting (a warmup-only failure is noise by construction —
-    // the query gets 3 recorded attempts regardless).
+    val queries = SparkEntry.queries
+    val catalog = Harness.select(queries.keys)
+    // passSamples(p)(name) = what pass p measured for that query (a failed
+    // pass records no sample); passBounds = wall-clock [start, end] of each
+    // pass, so a contended pass is identifiable in the artifact. Pass 0 is
+    // the discarded per-query codegen/JIT warmup: its times are recorded
+    // separately and excluded from medians, errors, and flaky accounting
+    // (a warmup-only failure is noise by construction — the query gets 3
+    // recorded attempts regardless).
     val warmupTimes =
       scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val passTimes = Array.fill(Passes)(
-      scala.collection.mutable.LinkedHashMap.empty[String, Double])
+    val passSamples = Array.fill(Passes)(
+      scala.collection.mutable.LinkedHashMap.empty[String, Sample])
     val passBounds = (0 to Passes).map { pass =>
       val passStart = System.currentTimeMillis() / 1000.0
-      catalog.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (pass == 0) warmupTimes(name) = sec
-          else passTimes(pass - 1)(name) = sec
-        } catch {
-          case e: Throwable =>
+      catalog.foreach { name =>
+        counts.reset()
+        var built: DataFrame = null
+        val run = Harness.runEntry(spark, sfDir, name, queries(name),
+          (_, df) => { built = df; Harness.noop(df) })
+        // brief drain so async listener events land before the counts are
+        // read or reset
+        Thread.sleep(50)
+        run match {
+          case Right(t) =>
+            val sample = Sample(t.buildS, t.sinkS,
+              counts.jobs.get, counts.stages.get, counts.tasks.get)
+            if (pass == 0) warmupTimes(name) = sample.total
+            else passSamples(pass - 1)(name) = sample
+            if (filtered) {
+              val phases = built.queryExecution.tracker.phases.map {
+                case (k, v) => s"$k=${fmt3((v.endTimeMs - v.startTimeMs) / 1000.0)}"
+              }.toSeq.sorted.mkString(" ")
+              System.err.println(s"[profile] $name pass=$pass " +
+                s"build=${fmt3(t.buildS)} exec=${fmt3(t.sinkS)} " +
+                s"total=${fmt3(sample.total)} jobs=${sample.jobs} " +
+                s"stages=${sample.stages} tasks=${sample.tasks} $phases")
+            }
+          case Left(e) =>
             System.err.println(s"[bench] $name FAILED (pass $pass): $e")
             if (pass > 0)
               failMsgs += name -> (e.getClass.getSimpleName + ": " +
                 Option(e.getMessage).getOrElse("").take(200))
         }
-        Harness.resetCaches(spark)
       }
       (passStart, System.currentTimeMillis() / 1000.0)
     }
+    val passTimes = passSamples.map(_.map { case (k, v) => k -> v.total })
     val warmupBounds = passBounds.head
     val recordedBounds = passBounds.tail
-    val results = catalog.map { case (name, _) =>
+    val results = catalog.map { name =>
       val times = passTimes.flatMap(_.get(name)).toSeq
       name -> (if (times.isEmpty) -1.0 else median(times))
     }
     // hard errors = no pass succeeded (matches the docstring: reported at -1
     // and listed); flaky = failed some pass but has a valid median
     val errors = catalog.collect {
-      case (name, _) if passTimes.forall(!_.contains(name)) =>
-        name -> failMsgs(name)
+      case name if passTimes.forall(!_.contains(name)) => name -> failMsgs(name)
     }
     val flaky = failMsgs.keySet.filter(n => passTimes.exists(_.contains(n)))
     // per-pass catalog totals: a host-contention window shows up as ONE
@@ -149,98 +254,20 @@ object Bench {
     // spread on a quiet host — flakiness already has its own field.
     // Guarded against empty/zero totals (a filtered run that erred
     // everywhere must not divide by zero).
-    val commonQs = catalog.map(_._1).filter(n => passTimes.forall(_.contains(n)))
+    val commonQs = catalog.filter(n => passTimes.forall(_.contains(n)))
     val commonTotals = passTimes.map(p => commonQs.map(p).sum).toSeq
     val spreadContended = commonTotals.nonEmpty && commonTotals.min > 0 &&
       (commonTotals.max - commonTotals.min) / commonTotals.min > 0.10
-    // SECOND contention tell (VERDICT r15 "what's wrong" #3): the spread
-    // heuristic cannot see a window that slows EVERY pass uniformly —
-    // round 15's driver window ran all 3 passes ~1.24x over the committed
-    // quiet snapshot with a 6% spread and the flag read false. So compare
-    // this run's medians against the newest committed quiet snapshot
-    // (bench/BENCH_DETAIL_r{N}.json, skipping any that self-flagged) on
-    // the SHARED healthy query set: > +15% total drift on unchanged-plan
-    // medians is the uniform-window signature. Positive-only — a faster
-    // run is improvement, not contention. Advisory like the spread flag:
-    // a genuine cross-round regression also trips it, which is exactly
-    // when a reader should open the per-query diff the fields below let
-    // them reproduce.
-    val baseline: Option[(String, Map[String, Double])] = {
-      val dir = java.nio.file.Paths.get("bench")
-      if (!java.nio.file.Files.isDirectory(dir)) None
-      else {
-        import scala.jdk.CollectionConverters._
-        val names = {
-          val st = java.nio.file.Files.list(dir)
-          try st.iterator().asScala.map(_.getFileName.toString).toSeq
-          finally st.close()
-        }
-        val rx = "^BENCH_DETAIL_r(\\d+)\\.json$".r
-        val candidates = names
-          .flatMap(n => rx.findFirstMatchIn(n).map(m => (m.group(1).toInt, n)))
-          .sortBy(-_._1)
-        val picked = candidates.iterator.flatMap { case (_, n) =>
-            try {
-              val txt = new String(
-                java.nio.file.Files.readAllBytes(dir.resolve(n)), "UTF-8")
-              // Skip snapshots whose own PASS SPREAD flagged them
-              // (internally noisy medians) and snapshots of a different
-              // scale factor. A snapshot flagged ONLY by baseline drift
-              // is still internally stable and MUST stay eligible as the
-              // next baseline: excluding it would latch the flag forever
-              // after any genuine cumulative slowdown (every later quiet
-              // run would keep comparing against the pre-slowdown round
-              // and keep flagging — review finding). Legacy artifacts
-              // without the spread_contended field fall back to the
-              // combined flag.
-              // a REAL JSON parse (Jackson, already on Spark's classpath)
-              // replaces the former brace-matching + number regex, which
-              // an artifact with braces/escapes inside strings could fool
-              // (advisor finding, round 16). STRICT duplicate detection:
-              // readTree silently keeps the LAST value of a repeated
-              // top-level key where the old brace-matcher took the FIRST
-              // — a duplicate-key artifact must fail loudly into the
-              // skip-with-diagnostic path below instead (advisor finding,
-              // round 17)
-              val root = new com.fasterxml.jackson.databind.ObjectMapper()
-                .enable(com.fasterxml.jackson.core.JsonParser.Feature
-                  .STRICT_DUPLICATE_DETECTION)
-                .readTree(txt)
-              val selfNoisy =
-                if (root.has("spread_contended"))
-                  root.path("spread_contended").asBoolean(false)
-                else root.path("contended").asBoolean(false)
-              if (selfNoisy || root.path("sf").asText("") != sfDir) None
-              else {
-                val qs = root.path("queries")
-                if (!qs.isObject) None
-                else {
-                  import scala.jdk.CollectionConverters._
-                  val pairs = qs.properties().asScala
-                    .filter(_.getValue.isNumber)
-                    .map(e => e.getKey -> e.getValue.asDouble())
-                    .filter(_._2 >= 0).toMap
-                  if (pairs.isEmpty) None else Some(n -> pairs)
-                }
-              }
-            } catch {
-              case e: Exception =>
-                // a snapshot that exists but cannot be parsed must say so —
-                // a silent None here disables the drift check with no
-                // diagnostic (advisor finding, round 16)
-                System.err.println(
-                  s"[bench-baseline] skipping unreadable snapshot $n: $e")
-                None
-            }
-          }.nextOption()
-        if (picked.isEmpty && candidates.nonEmpty)
-          System.err.println("[bench-baseline] " +
-            s"${candidates.size} committed snapshot(s) under bench/ but none " +
-            "usable as a drift baseline (self-flagged noisy, different sf, " +
-            "or unparseable) — drift check skipped this run")
-        picked
-      }
-    }
+    // SECOND contention tell: the spread heuristic cannot see a window that
+    // slows EVERY pass uniformly (round 15's driver window ran all 3 passes
+    // ~1.24x over the committed quiet snapshot with a 6% spread). So compare
+    // this run's medians against the newest committed quiet snapshot of the
+    // same sf and timing on the SHARED healthy query set: > +15% total
+    // drift is the uniform-window signature. Positive-only — a faster run
+    // is improvement, not contention. Advisory like the spread flag: a
+    // genuine cross-round regression also trips it, which is exactly when
+    // a reader should open the per-query diff.
+    val baseline = pickBaseline(sfDir)
     val resultMap = results.toMap
     // (snapshot file, shared-query count, snapshot total, current total,
     // signed relative drift) over queries healthy in BOTH runs
@@ -274,7 +301,7 @@ object Bench {
     // what a perf comparison actually reads first) and the complete
     // per-query medians go to BENCH_DETAIL.json next to build.sbt, where the
     // judge can diff every query across rounds.
-    if (only.isEmpty) {
+    if (!filtered) {
       val full = results.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       // one object per pass (wall-clock bounds + total + every per-query
@@ -290,6 +317,16 @@ object Bench {
           .mkString("{", ",", "}")
         s"""{"start":${fmt3(warmupBounds._1)},"end":${fmt3(warmupBounds._2)},"total":${fmt3(warmupTimes.values.sum)},"queries":$qs}"""
       }
+      // per query, the medians over recorded passes of each layer: build
+      // (eager staged work), exec (the noop write: Catalyst phases and
+      // execution) and the jobs, stages and tasks both scheduled
+      val layersJson = catalog.flatMap { name =>
+        val ss = passSamples.flatMap(_.get(name)).toSeq
+        def med(f: Sample => Double): Double = median(ss.map(f))
+        Option.when(ss.nonEmpty)(jsonStr(name) +
+          s""":{"build_s":${fmt3(med(_.buildS))},"exec_s":${fmt3(med(_.execS))},""" +
+          s""""jobs":${fmtCount(med(_.jobs))},"stages":${fmtCount(med(_.stages))},"tasks":${fmtCount(med(_.tasks))}}""")
+      }.mkString("{", ",", "}")
       val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json")
       val flakyJson = flaky.toSeq.sorted
         .map(n => jsonStr(n) + ":" + jsonStr(failMsgs(n)))
@@ -300,7 +337,7 @@ object Bench {
       // pass_totals include flaky queries' missing samples and can
       // contradict the flag otherwise
       java.nio.file.Files.write(detailPath,
-        s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"queries":$full,"errors":$es,"flaky":$flakyJson,"sf":"$sfDir","pass_totals":${passTotals.map(fmt3).mkString("[", ",", "]")},"common_pass_totals":${commonTotals.map(fmt3).mkString("[", ",", "]")},"contended":$contended,"spread_contended":$spreadContended,"baseline_drift":$baselineJson,"warmup":$warmupJson,"passes":$passesJson}
+        s"""{"metric":"total","value":$total,"unit":"sec","timing":"$Timing","nqueries":${results.size},"queries":$full,"layers":$layersJson,"errors":$es,"flaky":$flakyJson,"sf":"$sfDir","pass_totals":${passTotals.map(fmt3).mkString("[", ",", "]")},"common_pass_totals":${commonTotals.map(fmt3).mkString("[", ",", "]")},"contended":$contended,"spread_contended":$spreadContended,"baseline_drift":$baselineJson,"warmup":$warmupJson,"passes":$passesJson}
            |""".stripMargin.getBytes("UTF-8"))
     }
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
@@ -308,7 +345,7 @@ object Bench {
       .mkString("{", ",", "}")
     // filtered runs point at no detail file: BENCH_DETAIL.json would hold a
     // STALE earlier full run, and pairing the two silently mismatches
-    val detail = if (only.isEmpty) "\"BENCH_DETAIL.json\"" else "null"
+    val detail = if (!filtered) "\"BENCH_DETAIL.json\"" else "null"
     // pass_totals on the compact line too: the interleaved-pass spread is
     // the contention-window tell, and it costs ~40 chars of tail budget.
     // flaky NAMES also ride the compact line (normally `[]`): a query that
@@ -317,7 +354,7 @@ object Bench {
     // in BENCH_DETAIL.json and stderr.
     val flakyNames = flaky.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")
     val summaryLine =
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","nqueries":${results.size},"pass_totals":${passTotals.map(fmt3).mkString("[", ",", "]")},"contended":$contended,"baseline_drift":$baselineJson,"queries":$slowest,"errors":$es,"flaky":$flakyNames,"sf":"$sfDir","detail":$detail}"""
+      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","timing":"$Timing","nqueries":${results.size},"pass_totals":${passTotals.map(fmt3).mkString("[", ",", "]")},"contended":$contended,"baseline_drift":$baselineJson,"queries":$slowest,"errors":$es,"flaky":$flakyNames,"sf":"$sfDir","detail":$detail}"""
     println(summaryLine)
     // the same object as a FILE: the console line rides a truncated,
     // prefix-mangled buffer on the driver side; this copy always parses.

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** What the harness mains (Bench, Verify, HeatmapJob, ProfileQuery,
-  * PlanDump) share: one session policy, the between-query cache reset,
-  * the JSON string escaper and the generic warmup. */
+/** What the harness mains (Bench, Verify, HeatmapJob, PlanDump) share:
+  * one session policy, one catalog runner with its selection, the
+  * between-query cache reset, the JSON string escaper and the generic
+  * warmup. */
 object Harness {
   /** `local[cpus]` with one shuffle partition per core, UTC, and ANSI
     * pinned rather than inherited: Spark 4 defaults ANSI on (Long overflow
@@ -20,6 +21,34 @@ object Harness {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** The catalog names `only` selects, sorted. `only` is a FULL-anchored
+    * regex (`SPARK_GRAFT_ONLY` by default); unset selects every name. */
+  def select(names: Iterable[String],
+      only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[String] =
+    names.toSeq.sorted.filter(n => only.forall(n.matches))
+
+  /** Seconds one catalog entry spent building its frame (eager staged
+    * work included) and in its sink (the plan's execution). */
+  final case class EntryTimes(buildS: Double, sinkS: Double)
+
+  /** Runs one catalog entry: builds its frame, then hands it to `sink`,
+    * which must execute the whole plan (a `count()` would let the optimizer
+    * prune every column it does not need). Returns the two times or what
+    * either step threw, and always drops what the entry left cached. */
+  def runEntry(spark: SparkSession, sfDir: String, name: String,
+      build: (SparkSession, String) => DataFrame,
+      sink: (String, DataFrame) => Unit): Either[Throwable, EntryTimes] = {
+    val t0 = System.nanoTime()
+    try {
+      val df = build(spark, sfDir)
+      val t1 = System.nanoTime()
+      sink(name, df)
+      Right(EntryTimes((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
+    } catch {
+      case e: Throwable => Left(e)
+    } finally resetCaches(spark)
   }
 
   /** Drops what a query left cached. Builders persist() intermediates (LSH
@@ -56,8 +85,12 @@ object Harness {
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     val r = spark.range(2000000).select(col("id"), (col("id") % 1000).as("k"))
-    r.groupBy("k").count().orderBy("k").count()
-    r.join(spark.range(1000).withColumnRenamed("id", "k"), "k").count()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    noop(r.groupBy("k").count().orderBy("k"))
+    noop(r.join(spark.range(1000).withColumnRenamed("id", "k"), "k"))
+    noop(spark.read.parquet(s"$sfDir/region.parquet"))
   }
+
+  /** Executes the whole plan and keeps nothing: Spark's `noop` sink. */
+  def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 }

@@ -21,17 +21,14 @@ object PlanDump {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.specs.filter(_.name.matches(rx)).foreach { spec =>
-      try {
-        val plan = spec.build(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/${spec.name}$suffix.txt"), plan)
-        println(s"[plandump] wrote ${spec.name}$suffix.txt")
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[plandump] ${spec.name} failed: $e")
-      }
-      Harness.resetCaches(spark)
+    val queries = SparkEntry.queries
+    Harness.select(queries.keys, Some(rx)).foreach { name =>
+      Harness.runEntry(spark, sfDir, name, queries(name), (n, df) => {
+        Files.writeString(Paths.get(s"$outDir/$n$suffix.txt"),
+          df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        println(s"[plandump] wrote $n$suffix.txt")
+      }).left.foreach(e => System.err.println(s"[plandump] $name failed: $e"))
     }
     spark.stop()
   }

@@ -267,7 +267,7 @@ object KMeans {
             .select(col("ca"), col("cb"),
               call_function("vec_l2sq", col("va"), col("vb")).as("dcc2"))
           // Catalyst sizes a crossJoin-derived frame as the PRODUCT of its
-          // sides — the Bench broadcast-guard log showed 64 actual dcc rows
+          // sides — a broadcast-guard probe showed 64 actual dcc rows
           // estimated at 154 TB, which would shuffle-join the pair table
           // forever. The real bound is structural: k² rows of two ints + a
           // long, so decide on k, not on the estimate.

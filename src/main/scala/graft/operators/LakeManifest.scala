@@ -117,11 +117,6 @@ object LakeManifest {
     -1 // unreachable
   }
 
-  /** Initial manifest for a freshly built lake (v1 = the build's files).
-    * Called from the staged builds' epilogues, beside the sidecars. */
-  def commitInitial(lake: Path): Int =
-    commitMutation(lake, partCol = "", touched = Seq.empty)
-
   /** VACUUM — the maintenance step the commit protocol's crash story
     * needs: a writer that dies between writing data files and winning
     * its manifest commit leaves stray files no version will ever adopt

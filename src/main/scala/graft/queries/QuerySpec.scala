@@ -75,30 +75,10 @@ object Broadcasting {
     * headroom since these estimates are pre-filter upper bounds. */
   val DefaultThresholdBytes: Long = 64L << 20
 
-  /** When set (Bench turns it on), every guard decision prints ONE stderr
-    * line — a cluster profile can then see which hints fired at which
-    * estimated sizes before retuning the threshold for real executor
-    * memory. Decisions happen at plan-BUILD time (cheap, once per build);
-    * identical lines are deduped so Bench's 3× repetition stays readable. */
-  @volatile var logDecisions: Boolean = false
-  private val logged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def maybeBroadcast(df: DataFrame, threshold: Long = DefaultThresholdBytes): DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val hint = est <= BigInt(threshold)
-    if (logDecisions) {
-      val site = Thread.currentThread.getStackTrace
-        .find(e => e.getClassName.startsWith("graft.") &&
-          !e.getClassName.contains("Broadcasting") &&
-          !e.getClassName.contains("QuerySpec"))
-        .map(e => s"${e.getClassName.stripPrefix("graft.")}:${e.getLineNumber}")
-        .getOrElse("?")
-      val line = s"[broadcast-guard] site=$site est_bytes=$est " +
-        s"threshold=$threshold hint=${if (hint) "applied" else "skipped"}"
-      if (logged.add(line)) System.err.println(line)
-    }
-    if (hint) broadcast(df) else df
-  }
+  def maybeBroadcast(df: DataFrame, threshold: Long = DefaultThresholdBytes): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold))
+      broadcast(df)
+    else df
 }
 
 object Tables {

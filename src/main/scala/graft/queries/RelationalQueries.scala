@@ -27,7 +27,6 @@ object RelationalQueries {
 
   /** Exact integer cents from a double money column. */
   private def cents(c: Column): Column = floor(c * 100)
-  private def centsSql(e: String): String = s"CAST(FLOOR($e * 100) AS BIGINT)"
 
   private def tbl(s: SparkSession, dir: String)(name: String): DataFrame =
     Tables(s, dir, name)

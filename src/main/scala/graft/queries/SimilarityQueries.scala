@@ -409,10 +409,11 @@ object SimilarityQueries {
 
   // the quantizer is a TRAIN-ONCE artifact (versioned with the index, like
   // the staged v1 manifest of corpus_diff_stored), so it memoizes for the
-  // JVM's life INDEPENDENT of memoizeModel: re-fitting it inside every
+  // JVM's life, unlike [[kmeansModel]]: re-fitting it inside every
   // probe/build entry would time quantizer training — which emb_kmeans
   // already measures — not the probe or build being benched. Holds plain
-  // driver data (no session-pinned plans); the purge mirrors kmeansCache's.
+  // driver data (no session-pinned plans); entries of stopped sessions,
+  // and this session's entries for other dirs, are purged on each call.
   private val ivfCentCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[(Long, Seq[Double])]]()
 
@@ -834,54 +835,16 @@ object SimilarityQueries {
 
   // --- k-means + semantic dedup ------------------------------------------
 
-  // memoized per (session, dir): the fit is EAGER (driver-collected
-  // centroids, several jobs over the corpus), and emb_kmeans +
-  // dedup_semantic would otherwise re-fit the identical model back to back
-  // (x3 under Bench's repetition). The cached Model stays valid across the
-  // harness's clearCache(): the centroids are driver-side literals and the
-  // assignments plan simply recomputes its (unpersisted) inputs lazily.
-  // NOTE `scope` governs only a cache MISS (the fit it triggers); on a hit
-  // the argument is unused — the memoized Model's plans are scope-free by
-  // construction (see above), so a later caller's scope neither owns nor
-  // re-persists anything. A hit can therefore never leak blocks into a
-  // scope that outlives the caller.
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.KMeans.Model]()
-
-  /** Bench sets this false so `emb_kmeans` measures fit+assignment like its
-    * hash-identical twins. The table/twolevel twins CANNOT be memoized
-    * symmetrically: their fit cost lives in the assignments plan's lineage
-    * (persisted intermediates the harness clears between queries), so a
-    * cached DataFrame would recompute the fit lazily anyway — whereas the
-    * literal Model's fit collects centroids to driver literals once. The
-    * only symmetric bench contract is therefore "memoize none": with the
-    * memo on, a BENCH_DETAIL reader would conclude the literal plan is
-    * 20-40x faster when the difference is mostly what's being timed. */
-  @volatile private[graft] var memoizeModel: Boolean = true
-
+  /** The shared k-means fit (k=8, 2 passes) over the embedding micros.
+    * EAGER: the centroids are collected to driver literals, so every call
+    * runs the fit; `emb_kmeans` and its table/twolevel twins all time
+    * fit + assignment. */
   private[queries] def kmeansModel(s: SparkSession, dir: String,
       scope: CacheScope = CacheScope.Unmanaged): graft.operators.KMeans.Model = {
-    if (!memoizeModel) {
-      val v = emb(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * lit(1000000)).cast("long")).as("v"))
-      return graft.operators.KMeans.fit(v, "vec_id", "v", k = 8, passes = 2,
-        scope = scope)
-    }
-    // purge entries whose session has stopped (the Model's plans pin their
-    // SparkSession, so a JVM cycling sessions would otherwise accumulate
-    // dead ones here forever) AND this session's entries for OTHER dirs —
-    // the memo exists to serve back-to-back queries over one corpus, so a
-    // long-lived session sweeping many corpus dirs keeps exactly one Model,
-    // not one per dir ever visited
-    kmeansCache.keySet.removeIf(k => k._1.sparkContext.isStopped ||
-      (k._1.eq(s) && k._2 != dir))
-    kmeansCache.computeIfAbsent((s, dir), _ => {
-      val v = emb(s, dir).select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * lit(1000000)).cast("long")).as("v"))
-      graft.operators.KMeans.fit(v, "vec_id", "v", k = 8, passes = 2, scope = scope)
-    })
+    val v = emb(s, dir).select(col("vec_id"),
+      transform(col("embedding"),
+        x => floor(x.cast("double") * lit(1000000)).cast("long")).as("v"))
+    graft.operators.KMeans.fit(v, "vec_id", "v", k = 8, passes = 2, scope = scope)
   }
 
   /** Lloyd k-means, the ORACLE-CHECKED iterative-clustering primitive: two
@@ -2396,7 +2359,7 @@ object SimilarityQueries {
     * Scale shape: both inputs are corpus-sized, so the doc_id equi-join
     * is an honest co-partitioned shuffle join (nothing broadcasts);
     * everything after reduces to ≤ sources×k rows map-side. Reuses the
-    * memoized k-means fit and the SAME CTE chain as `emb_kmeans`, so a
+    * shared k-means fit and the SAME CTE chain as `emb_kmeans`, so a
     * clustering divergence fails both entries. */
   val corpusTopics = QuerySpec(
     "corpus_topics",

@@ -121,30 +121,12 @@ object StreamingQueries {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
       try {
-        val t0 = System.nanoTime()
         val q = df.writeStream.format("memory").queryName(sinkName)
           .outputMode(mode).start()
-        val t1 = System.nanoTime()
         try {
           q.processAllAvailable()
           require(q.exception.isEmpty, s"streaming query failed: ${q.exception}")
-        } finally {
-          val t2 = System.nanoTime()
-          q.stop()
-          // optimization-round diagnostics (env-gated, off in every harness
-          // run): per-batch engine timings + the start/process/stop wall
-          // split, so the fixed per-entry floor can be attributed to
-          // planning vs state/WAL I/O vs machinery latency
-          if (sys.env.contains("GRAFT_STREAM_PROFILE")) {
-            val t3 = System.nanoTime()
-            q.recentProgress.foreach(p => System.err.println(
-              s"[stream-profile] $sinkName batch=${p.batchId} " +
-                s"rows=${p.numInputRows} durationMs=${p.durationMs}"))
-            System.err.println(f"[stream-profile] $sinkName wall " +
-              f"start=${(t1 - t0) / 1e9}%.3f process=${(t2 - t1) / 1e9}%.3f " +
-              f"stop=${(t3 - t2) / 1e9}%.3f")
-          }
-        }
+        } finally q.stop()
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     }
     s.table(sinkName)
@@ -703,7 +685,7 @@ object StreamingQueries {
 
   /** STREAMING MODEL SERVING — the online half of the offline/online
     * k-means split every production vector pipeline runs: the model is fit
-    * OFFLINE over the batch table (the same memoized literal-centroid fit
+    * OFFLINE over the batch table (the same literal-centroid fit
     * as `emb_kmeans` — [[SimilarityQueries.kmeansModel]]), and arriving
     * vectors are assigned online by a stateless map-side argmin over the k
     * literal centroids (the `array_min`-of-structs form — no join, no
@@ -718,10 +700,11 @@ object StreamingQueries {
     "streaming model serving: arriving vectors assigned to offline k-means centroids",
     // the twin's contract IS the batch oracle — one definition, no drift
     SimilarityQueries.embKmeans.oracle,
-    (s, dir) => {
-      // offline fit (eager, memoized per (session, dir)); also registers
+    (s, dir, scope) => {
+      // offline fit (eager: the centroids are driver literals, so the
+      // scope's fit intermediates may go once it returns); also registers
       // the native vec_l2sq through the Tables chokepoint
-      val model = SimilarityQueries.kmeansModel(s, dir)
+      val model = SimilarityQueries.kmeansModel(s, dir, scope)
       val best = array_min(array(model.centroids.map { case (c, cv) =>
         struct(call_function("vec_l2sq", col("v"), typedlit(cv)).as("d2"),
           lit(c.toLong).as("c")) }: _*))
