@@ -18,7 +18,9 @@ import graft.tiles.TileMath
   * Differences from the reference, all deliberate:
   *   - two-phase pyramid (fine pre-aggregation + explode ancestors and ONE
   *     rollup aggregation) instead of 16 chained reduceByKey/groupByKey
-  *     rounds — 2 shuffles vs 32 (SURVEY.md §4.4.2);
+  *     rounds: [[pyramid]] shuffles twice where the reference shuffles 32
+  *     times (SURVEY.md §4.4.2), and [[run]] also shuffles twice, blob
+  *     packaging included;
   *   - intended user-group semantics: the fan-out applies exactly once, so
   *     `all`-group counts equal raw counts at every level, instead of the
   *     reference's exponential double-count (verified defect,
@@ -29,9 +31,11 @@ import graft.tiles.TileMath
   *   - source/sink are any DataFrame reader/writer (the reference hardcodes
   *     Cassandra, heatmap.py:131–150).
   *
-  * Scale: the aggregations shuffle (group, timespan, zoom, tile) keys
-  * with map-side combine; the `all` hot key is AQE-skew-splittable because
-  * counts are decomposable sums (SURVEY.md §7.4).
+  * Scale: the fine pre-aggregation shuffles (group, timespan, tile) keys
+  * with map-side combine. [[pyramid]]'s rollup does the same with the zoom
+  * added; [[run]]'s shuffles each level's tile uncombined, by result-set
+  * tile. The `all` hot key is AQE-skew-splittable because counts are
+  * decomposable sums (SURVEY.md §7.4).
   */
 object HeatmapPipeline {
 
@@ -98,24 +102,35 @@ object HeatmapPipeline {
   private def groupKeys(df: DataFrame): Seq[Column] =
     df.columns.toSeq.filterNot(Set("fine_row", "fine_col", "count")).map(col)
 
+  /** The fine-zoom pre-aggregation: (keys…, fine_row, fine_col, count). */
+  private def fineCounts(obs: DataFrame): DataFrame =
+    obs.groupBy(groupKeys(obs) :+ col("fine_row") :+ col("fine_col"): _*)
+      .agg(sum(col("count")).as("count"))
+
+  /** Every zoom level's tile of each fine-tile count, unaggregated:
+    * (keys…, zoom, r, c, count), each level's tile by exact integer shift. */
+  private def levels(fine: DataFrame, cfg: Config): DataFrame =
+    fine
+      .withColumn("zoom", explode(sequence(lit(cfg.coarseZoom), lit(cfg.fineZoom))))
+      .select(groupKeys(fine) ++ Seq(col("zoom"),
+        expr(s"shiftright(fine_row, ${cfg.fineZoom} - zoom)").as("r"),
+        expr(s"shiftright(fine_col, ${cfg.fineZoom} - zoom)").as("c"),
+        col("count")): _*)
+
   /** Stage 2 — ops #4–#10: counts per (keys, zoom, tile) for every zoom in
     * [coarseZoom, fineZoom]. Pre-aggregates at the fine zoom first (the
     * reference's level-from-level insight, heatmap.py:117): coarser levels
     * derive from the much smaller fine aggregate, not from raw
     * observations. Input: (keys…, fine_row, fine_col, count). */
   def pyramid(obs: DataFrame, cfg: Config = Config()): DataFrame =
-    rollup(obs.groupBy(groupKeys(obs) :+ col("fine_row") :+ col("fine_col"): _*)
-      .agg(sum(col("count")).as("count")), cfg)
+    rollup(fineCounts(obs), cfg)
 
   /** The zoom rollup of a fine-zoom count table (keys…, fine_row, fine_col,
     * count) into (keys…, zoom, r, c, count): explode the zooms, derive each
     * level's tile by exact integer shift, aggregate once. */
   def rollup(fine: DataFrame, cfg: Config = Config()): DataFrame =
-    fine
-      .withColumn("zoom", explode(sequence(lit(cfg.coarseZoom), lit(cfg.fineZoom))))
-      .groupBy(groupKeys(fine) ++ Seq(col("zoom"),
-        expr(s"shiftright(fine_row, ${cfg.fineZoom} - zoom)").as("r"),
-        expr(s"shiftright(fine_col, ${cfg.fineZoom} - zoom)").as("c")): _*)
+    levels(fine, cfg)
+      .groupBy(groupKeys(fine) ++ Seq(col("zoom"), col("r"), col("c")): _*)
       .agg(sum(col("count")).as("count"))
 
   /** THE blob byte format, one `"tileId":count` entry; every blob producer
@@ -129,25 +144,48 @@ object HeatmapPipeline {
   def blobJson(entries: Column): Column =
     concat(lit("{"), array_join(array_sort(entries), ","), lit("}"))
 
+  /** A level tile's result-set tile, `detailZoomDelta` zooms coarser, as
+    * integer keys. Row and column lead, so the sort an aggregate falls back
+    * to compares integers before the group and timespan strings. */
+  private def resultSetTile(cfg: Config): Seq[Column] =
+    Seq(shiftright(col("r"), cfg.detailZoomDelta), shiftright(col("c"), cfg.detailZoomDelta),
+      col("zoom"), col("user_group"), col("timespan"))
+
   /** Stage 3 — ops #6–#7, #11–#12 (heatmap.py:79–90, 120–129, 157): package
     * each zoom level into result-set blobs keyed `detailZoomDelta` zooms
-    * coarser. Input: (user_group, timespan, zoom, r, c, count). */
+    * coarser. Each entry is rendered before the grouping, so it is
+    * computed in generated code, not in the collecting aggregate; the
+    * `group|timespan|z_r_c` id is rendered once per blob from the integer
+    * key. Input: (user_group, timespan, zoom, r, c, count). */
   def resultSetBlobs(pyr: DataFrame, cfg: Config = Config()): DataFrame =
     pyr
       .filter(col("zoom") - cfg.detailZoomDelta >= 0)
-      .groupBy(
-        col("user_group"), col("timespan"),
-        concat_ws("_", col("zoom") - cfg.detailZoomDelta,
-          expr(s"shiftright(r, ${cfg.detailZoomDelta})"),
-          expr(s"shiftright(c, ${cfg.detailZoomDelta})")).as("rs_tile"))
-      .agg(blobJson(collect_list(blobEntryJson(
-        concat_ws("_", col("zoom"), col("r"), col("c")), col("count")))).as("heatmap"))
-      .select(concat_ws("|", col("user_group"), col("timespan"), col("rs_tile")).as("id"),
+      .withColumn("entry",
+        blobEntryJson(concat_ws("_", col("zoom"), col("r"), col("c")), col("count")))
+      .groupBy(resultSetTile(cfg): _*)
+      .agg(blobJson(collect_list(col("entry"))).as("heatmap"))
+      .toDF("rs_r", "rs_c", "zoom", "user_group", "timespan", "heatmap")
+      .select(concat_ws("|", col("user_group"), col("timespan"),
+        concat_ws("_", col("zoom") - cfg.detailZoomDelta, col("rs_r"), col("rs_c"))).as("id"),
         col("heatmap"))
 
-  /** The full batchMain equivalent: locations in, heatmap blobs out. */
-  def run(locations: DataFrame, cfg: Config = Config()): DataFrame =
-    resultSetBlobs(pyramid(observations(locations, cfg), cfg), cfg)
+  /** The full batchMain equivalent: locations in, heatmap blobs out.
+    * Equal to `resultSetBlobs(pyramid(observations(...)))` row for row, in
+    * two shuffles instead of three: after the fine pre-aggregation the
+    * exploded levels are repartitioned once by their result-set tile, so
+    * the zoom rollup and [[resultSetBlobs]], which group by supersets of
+    * that key, run in one stage and the blob fragments cross no second
+    * exchange. The rollup loses its map-side combine, which is why
+    * [[pyramid]] keeps its own exchange. */
+  def run(locations: DataFrame, cfg: Config = Config()): DataFrame = {
+    val fine = fineCounts(observations(locations, cfg))
+    val rsTile = resultSetTile(cfg)
+    resultSetBlobs(levels(fine, cfg)
+      .repartition(rsTile: _*)
+      .groupBy(rsTile ++ Seq(col("r"), col("c")): _*)
+      .agg(sum(col("count")).as("count"))
+      .select("user_group", "timespan", "zoom", "r", "c", "count"), cfg)
+  }
 
   /** Incremental maintenance — the reference's read-add-write-back append
     * (heatmap.py:149–150) without recomputing the base period: merge two

@@ -18,7 +18,8 @@ import graft.operators.HeatmapPipeline.{blobEntryJson, blobJson}
   *   - ONE Mercator quantization at the fine zoom (transcendental math once),
   *   - pyramid levels derived by exact integer shifts (`row >> (fine-z)`),
   *     exploded in a single generator over the fine pre-aggregate → two
-  *     hash aggregations / shuffles in total,
+  *     shuffles for the pyramid, and two for pyramid plus blobs in
+  *     `HeatmapPipeline.run`,
   *   - user-group / timespan fan-out via `explode` (Catalyst Generate),
   *   - the result-set JSON blob via sorted `collect_list` + string concat.
   *
@@ -183,8 +184,10 @@ object HeatmapQueries {
   /** The full 16-level pyramid (ops #4–#10, heatmap.py:107–118) through
     * [[HeatmapPipeline.pyramid]]: quantize once at z21, pre-aggregate at the
     * fine zoom, explode zooms 6..21 over the fine aggregate, derive each
-    * level's tile by integer shift, aggregate again. Two partial+final
-    * HashAggregates replace the reference's 32 shuffles (SURVEY.md §4.4.2). */
+    * level's tile by integer shift, aggregate again. The pyramid shuffles
+    * twice, where the reference shuffles 32 times (SURVEY.md §4.4.2);
+    * [[HeatmapPipeline.run]] (`hm_pipeline_blobs`) also shuffles twice, its
+    * blob packaging included. */
   val hmPyramid = QuerySpec(
     "hm_pyramid",
     "16-level tile pyramid, groups × timespans, two-phase (fine pre-agg + zoom rollup)",

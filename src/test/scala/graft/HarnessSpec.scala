@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The harness pieces: the JSON escaper, the catalog selection and the
-  * catalog runner every main shares. */
+/** The harness pieces: the JSON escaper, the catalog selection, the
+  * catalog runner every main shares and PlanDump's plan text. */
 class HarnessSpec extends AnyFunSuite {
 
   test("jsonStr: keys and values with quotes, backslashes and control chars round-trip through Jackson") {
@@ -59,5 +60,20 @@ class HarnessSpec extends AnyFunSuite {
     val run = Harness.runEntry(spark, TestSpark.sfSmoke, "range",
       (s, _) => s.range(10).toDF("id"), (_, df) => Harness.noop(df))
     assert(run.exists(t => t.buildS >= 0 && t.sinkS >= 0), run)
+  }
+
+  test("PlanDump.dump: an entry's text does not depend on what was built before it") {
+    // Catalyst's expression ids count up across every plan the JVM builds;
+    // the dump renumbers them by first appearance
+    val spark = TestSpark.spark
+    val build = SparkEntry.queries("hm_pyramid")
+    val first = build(spark, TestSpark.sfSmoke)
+    val before = PlanDump.dump(first)
+    SparkEntry.queries("hm_tiles")(spark, TestSpark.sfSmoke)
+    val again = build(spark, TestSpark.sfSmoke)
+    assert(first.queryExecution.explainString(FormattedMode) !=
+      again.queryExecution.explainString(FormattedMode), "raw ids should differ")
+    assert(PlanDump.dump(again) == before)
+    assert(before.contains("#0"), before)
   }
 }

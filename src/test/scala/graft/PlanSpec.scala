@@ -160,6 +160,21 @@ class PlanSpec extends AnyFunSuite {
       s"pyramid must aggregate in exactly two shuffles:\n$plan")
   }
 
+  test("HeatmapPipeline.run: two shuffles from locations to blobs, the blob aggregate in the rollup's stage") {
+    // one hash exchange for the fine pre-aggregation, one repartition by
+    // result-set tile that the zoom rollup and the blob collect_list both
+    // reuse (the final range exchange is hm_pipeline_blobs' ORDER BY)
+    val plan = physicalPlan(HeatmapQueries.hmPipelineBlobs.build(spark, sf))
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2,
+      s"run must shuffle exactly twice:\n$plan")
+    // Spark plans a collect_list as a partial and a final aggregate; no
+    // exchange may separate them, so blob fragments are never shuffled
+    val lines = plan.linesIterator.toSeq
+    val merged = lines.indexWhere(_.contains("functions=[collect_list("))
+    assert(merged >= 0 && lines(merged + 1).contains("functions=[partial_collect_list("),
+      s"the blob aggregate's two phases must be adjacent:\n$plan")
+  }
+
   test("hm_blob_explode never computes the month/day fan (alltime pushed below aggs)") {
     // regression pin for the discarded-fan bug: exactly two Generates — the
     // user-group fan and the from_json map explode — and NO third generator
