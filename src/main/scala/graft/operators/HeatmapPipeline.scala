@@ -201,23 +201,34 @@ object HeatmapPipeline {
     * touches raw locations.
     *
     * `countType`: double for [[run]]'s blobs (the reference's
-    * `{tile: 2.0}`), bigint for the catalog's (`{tile: 2}`). */
+    * `{tile: 2.0}`), bigint for the catalog's (`{tile: 2}`).
+    *
+    * Each side's blobs are parsed once per row, in a projection right
+    * after that side is read, and the join carries the parsed maps; a side
+    * missing from the join is the empty map. `map_zip_with` and `transform`
+    * are not code-generated and get no common-subexpression elimination, so
+    * a parse among their arguments would run interpreted, twice per row
+    * with its null guard, for both sides of every joined row (the "{}"
+    * stand-in of each untouched base row included), and after the shuffle,
+    * in the few partitions adaptive execution coalesces it to. Below the
+    * join the parse runs in the read's own tasks. */
   def mergeBlobs(base: DataFrame, delta: DataFrame,
       countType: DataType = DoubleType): DataFrame = {
     val mapType = MapType(StringType, countType)
     // a malformed blob must FAIL the job, not vanish: from_json returns null
     // on parse failure, and a null map would silently null the merged row —
-    // on a corrupt blob store that is data loss disguised as success
-    def parsed(c: Column): Column = {
-      val m = from_json(coalesce(c, lit("{}")), mapType)
-      when(m.isNull, raise_error(concat(lit("mergeBlobs: malformed blob JSON for id "),
-        col("id"), lit(": "), c))).otherwise(m)
-    }
+    // on a corrupt blob store that is data loss disguised as success. The
+    // guard is coalesce's fallback, so the parse is written (and run) once.
+    def parsed(side: DataFrame, name: String): DataFrame =
+      side.select(col("id"), coalesce(
+        from_json(coalesce(col("heatmap"), lit("{}")), mapType),
+        raise_error(concat(lit("mergeBlobs: malformed blob JSON for id "),
+          col("id"), lit(": "), col("heatmap")))).as(name))
+    val empty = map().cast(mapType)
     val zero = lit(0).cast(countType)
-    val merged = map_zip_with(parsed(col("hb")), parsed(col("hd")),
+    val merged = map_zip_with(coalesce(col("mb"), empty), coalesce(col("md"), empty),
       (_, v1, v2) => coalesce(v1, zero) + coalesce(v2, zero))
-    base.select(col("id"), col("heatmap").as("hb"))
-      .join(delta.select(col("id"), col("heatmap").as("hd")), Seq("id"), "full_outer")
+    parsed(base, "mb").join(parsed(delta, "md"), Seq("id"), "full_outer")
       .select(col("id"),
         blobJson(transform(map_entries(merged),
           e => blobEntryJson(e.getField("key"), e.getField("value")))).as("heatmap"))

@@ -120,6 +120,31 @@ class HeatmapPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("mergeBlobs: the malformed-blob guard holds on both join sides") {
+    // a corrupt blob fails the job even where the other side has no row for
+    // its id: an untouched base blob and a delta blob new to the base
+    import spark.implicits._
+    for ((good, countType) <- Seq(("1.0", DoubleType), ("1", LongType))) {
+      val blob = s"""{"12_32_32":$good}"""
+      val corrupt = """{"12_32_32":"""
+      val base = Seq(("g|alltime|7_1_1", blob), ("g|alltime|7_2_2", corrupt)).toDF("id", "heatmap")
+      val delta = Seq(("g|alltime|7_1_1", blob)).toDF("id", "heatmap")
+      failsWith("malformed blob JSON for id g|alltime|7_2_2") {
+        HeatmapPipeline.mergeBlobs(base, delta, countType).collect()
+      }
+      val newId = Seq(("g|alltime|7_1_1", blob), ("g|alltime|7_3_3", corrupt)).toDF("id", "heatmap")
+      failsWith("malformed blob JSON for id g|alltime|7_3_3") {
+        HeatmapPipeline.mergeBlobs(delta, newId, countType).collect()
+      }
+      // a null stored blob is an empty one: untouched it renders as {},
+      // touched it renders as the delta's blob
+      val withNull = Seq(("g|alltime|7_1_1", null: String), ("g|alltime|7_2_2", null: String))
+        .toDF("id", "heatmap")
+      assert(canon(HeatmapPipeline.mergeBlobs(withNull, delta, countType)) ==
+        Seq("g|alltime|7_1_1" -> blob, "g|alltime|7_2_2" -> "{}"), s"$countType null base")
+    }
+  }
+
   test("a null latitude or longitude fails the job instead of writing a malformed blob") {
     // concat_ws would drop the null row/col and store `all|alltime|16`;
     // the reference's tile math raises on None

@@ -175,6 +175,29 @@ class PlanSpec extends AnyFunSuite {
       s"the blob aggregate's two phases must be adjacent:\n$plan")
   }
 
+  test("mergeBlobs parses each side below the join") {
+    // map_zip_with and transform are not code-generated: a from_json among
+    // their arguments would parse every blob after the shuffle, interpreted,
+    // once more for its null guard. Each side parses once, in its own
+    // projection under the join's exchanges, and nothing above the join
+    // parses.
+    val plan = HeatmapQueries.hmBlobMerge.build(spark, sf).queryExecution.executedPlan
+    val root = plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def parses(n: org.apache.spark.sql.execution.SparkPlan): Int =
+      n.expressions.map(e => "from_json".r.findAllIn(e.toString).size).sum
+    val joins = root.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    assert(joins.size == 1, s"one join:\n$root")
+    val exchanges = joins.head.children.flatMap(_.find(_.nodeName == "Exchange"))
+    assert(exchanges.size == 2, s"the join reads two exchanges:\n$root")
+    val perSide = exchanges.map(_.collect { case n => parses(n) }.sum)
+    assert(perSide == Seq(1, 1), s"each side parses once, under its exchange:\n$root")
+    assert(root.collect { case n => parses(n) }.sum == perSide.sum,
+      s"no blob is parsed between the exchanges and the output:\n$root")
+  }
+
   test("hm_blob_explode never computes the month/day fan (alltime pushed below aggs)") {
     // regression pin for the discarded-fan bug: exactly two Generates — the
     // user-group fan and the from_json map explode — and NO third generator
