@@ -96,30 +96,59 @@ object StreamingQueries {
       .option("recursiveFileLookup", "true")
       .parquet(stage.toString)
 
+  /** The stream session policy [[runToSink]] applies; see there. */
+  private val StreamConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
   /** Run a streaming DataFrame to completion into a memory sink and return
     * the sink table. The sink is only ever read AFTER processAllAvailable +
     * stop, so the comparison is deterministic.
     *
-    * State partitions: a streaming query materializes one state store PER
-    * shuffle partition PER stateful operator PER micro-batch — sizing them
-    * to the session default (CPU count) pays store open/commit overhead
-    * that tracks cores, not keys. Stateful-query parallelism should track
-    * KEY CARDINALITY and throughput; these corpus streams have at most a
-    * few hundred active keys, so 8 partitions carry them comfortably (a
-    * production deployment tunes this per query the same way — it is fixed
-    * into the checkpoint at first start). Restored after the run so batch
-    * queries keep the session default. */
-  private val StatePartitions = 8
-
+    * The stream session policy: three session confs are set for the
+    * query's lifetime and restored exactly afterwards — a key that was
+    * unset before is unset again — so batch queries keep the session as
+    * they found it.
+    *
+    *  - `spark.sql.shuffle.partitions` = 8, the state partitions: a
+    *    streaming query materializes one state store PER shuffle partition
+    *    PER stateful operator PER micro-batch — sizing them to the session
+    *    default (CPU count) pays store open/commit overhead that tracks
+    *    cores, not keys. Stateful-query parallelism should track KEY
+    *    CARDINALITY and throughput; these corpus streams have at most a few
+    *    hundred active keys, so 8 partitions carry them comfortably (a
+    *    production deployment tunes this per query the same way — it is
+    *    fixed into the checkpoint at first start).
+    *  - `spark.sql.artifact.isolation.enabled` = false: every streaming
+    *    query runs on a cloned session with a fresh session UUID, and with
+    *    artifact isolation on (the Spark 4.1 default) the executor builds a
+    *    new session classloader for that UUID. `CodeGenerator`'s cache is
+    *    keyed by (context classloader, code), so with isolation on every
+    *    start Janino-compiles its generated classes again: 11 compiles of
+    *    byte-identical code per warm `stream_hm_pyramid` run, with its
+    *    state tasks waiting on them. With isolation off, a restarted entry
+    *    compiles nothing. The clone copies the runtime conf, so setting it
+    *    on this session is enough; the program adds no session artifacts
+    *    (no `addArtifact`/`addJar`), so there is nothing to isolate.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    `FileSystemBasedCheckpointFileManager`: the default FileContext
+    *    manager checks link status on every checkpoint file, and without
+    *    libhadoop each check forks a `readlink` process — about 176 forks
+    *    per `stream_hm_pyramid` start, ~1 ms each. The FileSystem manager
+    *    writes through a temp file and a rename, which is atomic on a local
+    *    file system, and each query's checkpoint is a fresh temporary
+    *    directory with one writer. */
   private def runToSink(df: DataFrame, mode: String, sinkName: String): DataFrame = {
     val s = df.sparkSession
-    // synchronized: the save/set/restore of a session-GLOBAL conf would
+    // synchronized: the save/set/restore of session-GLOBAL confs would
     // interleave under concurrent callers (A saves 32 → B saves A's 8 →
     // B's restore pins the session at 8); Verify/Bench are sequential
     // today, but the guard costs nothing
     StreamingQueries.synchronized {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+      val prev = StreamConfs.map { case (k, _) => k -> s.conf.getOption(k) }
+      StreamConfs.foreach { case (k, v) => s.conf.set(k, v) }
       try {
         val q = df.writeStream.format("memory").queryName(sinkName)
           .outputMode(mode).start()
@@ -127,7 +156,7 @@ object StreamingQueries {
           q.processAllAvailable()
           require(q.exception.isEmpty, s"streaming query failed: ${q.exception}")
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      } finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     }
     s.table(sinkName)
   }

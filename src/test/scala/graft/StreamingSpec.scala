@@ -252,4 +252,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(byUser(9L).map(s => (s.start_ms, s.end_ms, s.n_events)) ==
       Seq((ts(5).getTime, ts(60).getTime, 3L)))
   }
+
+  test("a stream entry started again compiles no generated class") {
+    // every start runs on a cloned session with a fresh UUID; with artifact
+    // isolation on, its classloader misses CodeGenerator's cache, so the
+    // byte-identical classes of the second run would be compiled again
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val build = SparkEntry.queries("stream_hm_pyramid")
+    def rows() = build(spark, TestSpark.sfSmoke).collect().toSeq
+    val first = rows()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = rows()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles == 0, s"the second run compiled $compiles classes")
+    assert(first.nonEmpty && second == first)
+  }
+
+  test("runToSink leaves the session's confs as it found them") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    def confs() = keys.map(spark.conf.getOption)
+    val before = confs()
+    assert(before.last.isEmpty, "the checkpoint manager must start unset")
+    SparkEntry.queries("stream_tumbling")(spark, TestSpark.sfSmoke).collect()
+    assert(confs() == before)
+  }
 }
